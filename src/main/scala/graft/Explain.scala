@@ -80,31 +80,31 @@ object Explain {
     "q84b_stream_curation_ttl" -> "bounded-TTL streaming curation (fixed 300 s dedup state, at-least-once redelivery modeled in batch 4); pinned plan is the post-replay multiplicity aggregate over the sink cut",
     "q86b_knn_join_capped" -> "q86's k-NN join kernel with the chunk cap forced small — the skew path (rank-chunked candidate join) is what executes and is oracle-checked",
     "q92b_scene_groups" -> "scene grouping: frame-signature contraction + shared min-label propagation; a static shot contracts to 1 representative and 0 pairs before any join",
-    "q101b_zorder_lifecycle" -> "Z-order maintenance chain save → append (saved-grid quantization) → compact (per-zbucket z-sorted rewrite) → serve; pinned plan is the serve scan over the compacted layout with zbucket PartitionFilters",
+    "q101b_zorder_lifecycle" -> "Z-order maintenance chain saveCommit → appendCommit (saved-grid quantization) → purgeCommit (copy-on-write per-zbucket z-sorted merge of the fragmented buckets) → serve the current version; pinned plan is the serve scan over the merged layout with zbucket PartitionFilters",
     "q102_stream_stream_join" -> "watermarked stream-stream interval join (clicks x purchases within 30 min), both sides streaming: inner join emits eagerly, watermark + time bound evict both state sides; pinned plan is the post-replay assembly",
     "q102b_stream_stream_left" -> "left-outer interval join: unmatched clicks emit on watermark timeout, dual far-future sentinels (Replay.sentinelAfterStage) flush the global watermark at replay end; pinned plan is the post-replay assembly",
     "q103_ingest_loop" -> "3 sequential admit -> append rounds against a pre-staged clone of the persisted LSH index: each batch broadcast-probes the file-pruned bands scan AS IT STANDS; pinned plan is the verdict assembly over the staged per-batch results",
-    "q103b_ingest_compacted" -> "q103 with a mid-loop MinHashIndex.compact (one file per (band_id, kbucket) after append fragmentation) — identical verdict oracle proves the rewrite result-neutral",
+    "q103b_ingest_compacted" -> "q103 with a mid-loop compactCommitSnapshot (maxFiles = 1: each fragmented (band_id, kbucket) partition merges to one new file and the manifest swaps it in) — identical verdict oracle proves the merge result-neutral",
     "q103s_stream_ingest" -> "q103 driven through the engine's micro-batch cycle: foreachBatch admits each arriving batch (verdicts staged to parquet, admitted ids JOINED — no In-literal) and appends before the next trigger; pinned plan is the final verdict read",
     "q104_stream_budget" -> "transformWithState on RocksDB state v2: per-source Long counter seeded from the initial-state budget relation, arrival-ordered cap; pinned plan is the post-replay ordering over the sink cut",
-    "q107_index_delete" -> "retention delete from the persisted LSH index: touched-partition set from a bounded semi-join, dynamic partition overwrite rewrites ONLY those partitions, emptied dirs removed; pinned plan is the serve scan over the surviving index",
+    "q107_index_delete" -> "retention delete from a committed clone of the persisted LSH index: deleteCommit tombstones the ids, purgeCommit rewrites ONLY the partitions holding their band rows (touched set from a bounded semi-join) as new files and drops the list; pinned plan is the serve scan over the current version",
     "q109_index_timetravel" -> "snapshot-isolated index with time travel (manifest commits): append adds files + commits v2, then ONE probe sketch serves as-of v1 AND v2 — the v1 leg reads the v1 manifest's file set (basePath keeps (band_id, kbucket) pruning), blind to the append by construction",
     "q110_incremental_clusters" -> "incremental cluster maintenance: batch edges from the persisted-index serve + within-batch band join (one shared probe sketch), label propagation on the QUOTIENT graph (batch docs + touched cluster labels only), broadcast label remap back onto the resident state — never a corpus re-cluster",
     "q113_snapshot_compact" -> "snapshot-preserving compaction: append commits v2, copy-on-write merge of v2's fragmented (band_id, kbucket) partitions lands NEW sibling files and commits v3, then one probe sketch serves as-of v1/v2/v3 — v1 blind to the append, v3 row-identical to v2; pinned plan is the three-leg as-of serve union",
     "q114_cluster_changefeed" -> "change data feed from the incremental cluster step: inserts straight from the quotient propagation, updates from the label table joined against the BROADCAST changed-remap — O(batch + touched members), never a corpus diff of two label snapshots; pinned plan is the feed union",
-    "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, upserts the bucket-partitioned label table partition-locally (partitionFromKey — no resident scan), and appends to the index before the next trigger; pinned plan is the final label-table read",
-    "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and mutates the table partition-locally before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the final label-table read",
-    "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; retired rows leave via partition-local delete, relabels land via partition-local upsert; pinned plan is the final label-table read",
-    "q112_ingest_autocompact" -> "q103's ingest loop under the threshold-triggered PARTITION-LOCAL compaction policy: after each append, only (band_id, kbucket) directories whose file count crossed the threshold are rewritten — write amplification bounded by where arrivals landed, never the index size; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
+    "q110s_stream_clusters" -> "q110 through the engine's micro-batch cycle: each foreachBatch serves edges against the index AS IT STANDS, quotient-propagates, merges into the committed bucket-partitioned label table partition-locally (SnapshotTable.mergeCommit, partitionFromKey — no resident scan), and appends to the index before the next trigger; pinned plan is the final label-table read",
+    "q111s_stream_retire" -> "q111 through the engine's micro-batch cycle: each foreachBatch touches the clusters of its retirees against the label table AS IT STANDS, re-solves the survivor-induced subgraph, and commits one partition-local merge (deletes + relabels) before the next trigger — a twice-touched cluster re-solves against its current membership, so the composition equals the one-shot retire; pinned plan is the final label-table read",
+    "q111_cluster_retire" -> "decremental cluster maintenance: touched clusters from one semi-join against the label table, survivor-induced edges from the memoized pair relation restricted to touched survivors, components re-solved on that bounded subgraph only; retired rows and relabels land in ONE partition-local merge commit (deletes leg + updates leg); pinned plan is the final label-table read",
+    "q112_ingest_autocompact" -> "q103's ingest loop under the threshold-triggered PARTITION-LOCAL compaction policy: after each append commit, compactCommitSnapshot(maxFiles = 2) merges only the (band_id, kbucket) partitions whose file count crossed the threshold — write amplification bounded by where arrivals landed, never the index size; identical oracle to q103 proves the policy result-neutral at every loop point; pinned plan is the verdict assembly",
     "q108_cluster_split" -> "leakage-proof split from the near-dup CLUSTER label: stateless column expression over the memoized cluster relation (pinned plan reads the label cut) — the timed cost in a sweep is the shared minhash-pairs + cluster memo it happens to pay first",
     "q115_cms_freq" -> "count-min sketch build: map-side partials collapse the token stream to the fixed D×W geometry before the one exchange (≤ D×W cells per task); estimates are min-over-rows lookups against the BROADCAST sketch — no shuffled join on term anywhere",
-    "q116_vocab_increment" -> "incremental materialized-view maintenance: batch-only aggregation + merge join bounded by the BATCH's vocabulary against partition-pruned resident rows + partition-local upsert — the corpus aggregate never re-runs; pinned plan is the post-increment stats read",
-    "q117_changefeed_apply" -> "CDC consumer: feed rows MERGE into the bucket-partitioned label mirror partition-locally (touched buckets derive from the feed), keep-list view recomputes only the feed's touched clusters, untouched clusters pass through from pre-batch state; pinned plan is the keep-list union",
+    "q116_vocab_increment" -> "incremental materialized-view maintenance: batch-only aggregation + merge join bounded by the BATCH's vocabulary against partition-pruned resident rows + partition-local merge commit — the corpus aggregate never re-runs; pinned plan is the post-increment stats read",
+    "q117_changefeed_apply" -> "CDC consumer: feed rows MERGE into the committed bucket-partitioned label mirror partition-locally (touched buckets derive from the feed), keep-list view recomputes only the feed's touched clusters, untouched clusters pass through from pre-batch state; pinned plan is the keep-list union",
     "q118_lm_perplexity" -> "bigram-LM perplexity: the model is three broadcast relations (bigram counts, context counts, vocab); scoring is one corpus scan → shingle explode → four BroadcastHashJoins → per-doc agg on the pre-repartitioned doc_id key — the only corpus-volume shuffle is that one repartition",
     "q119_nb_quality" -> "Naive Bayes quality gate: training is map-side-combined term counts + three scalar aggs; the (term → two class counts) model is broadcast, so scoring is scan → explode → BroadcastHashJoin → doc_id-partitioned agg — the q118 shape with a learned decision",
     "q120_kmv_source_overlap" -> "KMV cross-source overlap: corpus contributes one distinct (source, digest-hash) aggregation; bottom-k sketches + all pairwise union/intersection estimates run on sketch rows (sources × k); the exact_inter self-eval leg is the digest join a production run drops",
     "q121s_stream_ann_ingest" -> "streaming online ANN (search-then-index): each foreachBatch serves its own top-k against the cid-partitioned assignment AS IT STANDS (per-probe NProbe cells under broadcast centroids) then appends itself cid-shuffled; pinned plan is the final staged-results read",
-    "q122_ivf_refresh" -> "IVF centroid refresh: one Lloyd round as a map-side-combined groupBy(cid) over k×64 partial means, map-side reassignment under the broadcast refreshed centroids, and only DRIFTED vectors move on disk (partition-local delete + cid append); pinned plan is the post-refresh assignment read",
+    "q122_ivf_refresh" -> "IVF centroid refresh: one Lloyd round as a map-side-combined groupBy(cid) over k×64 partial means, map-side reassignment under the broadcast refreshed centroids, and only DRIFTED vectors move, through one copy-on-write commit (losing cells rewritten, movers appended); pinned plan is the post-refresh assignment read",
     "q123_editdist_verify" -> "edit-distance verification of LSH candidates: prefix projections ride broadcast joins onto the memoized pair relation, the BANDED thresholded Levenshtein (equality short-circuit, -1 beyond LevBand) runs map-side on the pair stream's partitioning — no full O(n²) DP, no extra shuffle",
     "q124_curriculum_rank" -> "global curriculum rank via GlobalOrder: bounded difficulty-value histogram prefix-summed driver-side, broadcast offset join, within-bucket rank as a PARTITIONED window — no SinglePartition exchange anywhere",
     "q125_containment" -> "asymmetric containment scoring: distinct doc pairs from the chunk-grain candidate join, distinct-token sets ride only the two candidate-sized doc_id joins, array_intersect arithmetic map-side",

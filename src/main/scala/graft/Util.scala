@@ -23,13 +23,17 @@ object Fs {
     * layouts (part files nested under key=value dirs) are counted
     * instead of silently summing to zero bytes.
     *
-    * The local filesystem takes a java.nio fast path: Hadoop's local
-    * adapter materializes permission info by SHELLING OUT per file
-    * (~5 ms each — measured 1.5 s for a 256-file index tree vs 0.02 s
-    * via nio), which made every manifest commit and storage audit
-    * O(files) in process spawns. Callers only consume path/length/
-    * mtime, which nio provides without the exec. Remote filesystems
-    * (hdfs://, s3a://) keep the FileSystem API path. */
+    * The local filesystem takes a java.nio fast path. Callers only
+    * consume path/length/mtime, which one `Files.walk` provides; the
+    * FileSystem API route pays per-entry status objects on top. Stock
+    * Hadoop `LocalFileSystem` shells out per file for permissions
+    * (1.2 s for 512 parquet files across 128 `band_id/kbucket` dirs,
+    * 3.9 s for 2048). [[graft.fs.FastLocalFileSystem]]'s recursive
+    * `listFiles` removes the forks but is still slower than this walk
+    * (10.8 ms vs 3.9 ms at 512 files, 36 ms vs 14 ms at 2048, 4-vCPU
+    * host), and every manifest commit and as-of read lists through
+    * here — so the fast path stays. Remote filesystems (hdfs://,
+    * s3a://) keep the FileSystem API path. */
   def listDataFiles(dir: String, conf: Configuration,
       suffix: String = ".parquet"): Seq[FileStatus] = {
     val (fs, p) = resolve(dir, conf)
@@ -59,6 +63,18 @@ object Fs {
       }
       buf.toSeq
     }
+  }
+
+  /** Byte-copy the tree at `srcDir` to `destDir` (both scheme-aware)
+    * — index clones and small side artifacts (meta / centroids). */
+  def copyDir(s: org.apache.spark.sql.SparkSession, srcDir: String,
+      destDir: String): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val (srcFs, srcPath) = resolve(srcDir, conf)
+    val (dstFs, dstPath) = resolve(destDir, conf)
+    require(org.apache.hadoop.fs.FileUtil.copy(
+      srcFs, srcPath, dstFs, dstPath, false, conf),
+      s"copy $srcDir -> $destDir failed")
   }
 
   /** Set a file's modification time (q77's sentinel-last ordering

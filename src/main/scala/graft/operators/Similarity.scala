@@ -429,58 +429,14 @@ object Similarity {
     * the staging root, written once ([[graft.plans.PqIndex
     * .ensureSaved]] / [[graft.plans.IvfTopK.ensureSaved]]), reclaimed
     * at JVM exit. Bounded hooks: at most #kinds × #sfDirs per JVM. */
-  /** ONE IVF refresh step over a cid-partitioned assignment table
-    * (q122's body, package-visible so ScaleShapeSpec can assert the
-    * move locality on its own clone): refreshed centroids = per-cell
-    * dimension means (ivfModel's update arithmetic), map-side
-    * reassignment under the broadcast refreshed centroid array, and a
-    * partition-local MOVE of exactly the reassigned rows (delete from
-    * old cells + cid append) — cells without movers keep their files
-    * byte-identical. The refreshed centroid artifact is written to
-    * `centsOut` BEFORE the assignment mutation (a plan executed after
-    * the rewrite would resolve against a stale file listing). Returns
-    * (vec_id, old_cid, new_cid, moved) with new_cid read back from
-    * the MUTATED table, so an oracle gate on the result proves the
-    * disk state, not just the arithmetic. */
-  private[graft] def refreshAssignment(s: SparkSession, assignPath: String,
-      centsOut: String): DataFrame = {
-    import graft.plans.IndexMaintenance
-    val cur = graft.plans.ManifestIO.readDir(s, assignPath)
-      .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-    val embCols = cur.schema.fieldNames.filter(c => c != "cid" && c != "v").toSeq
-    val newCents = cur.groupBy(col("cid")).agg(
-      array((0 until 64).map(i =>
-        round(avg(expr(s"v[$i]")), 6)): _*).as("cv"))
-    val carr = newCents.agg(collect_list(struct(
-      col("cid").cast("long").as("cid"), col("cv"))).as("carr"))
-    val delta = graft.Materialize.cut(cur
-      .crossJoin(broadcast(carr))
-      .withColumn("new_cid", element_at(
-        VectorFunctions.topCells(col("v"), col("carr"), 1), 1)
-        .getField("cid").cast("int"))
-      .select((embCols.map(col) :+ col("cid").as("old_cid")
-        :+ col("new_cid")): _*))
-    val moved = delta.where(col("old_cid") =!= col("new_cid"))
-    newCents.write.mode("overwrite").parquet(centsOut)
-    IndexMaintenance.deletePartitioned(s, assignPath,
-      Seq("cid"), "vec_id", moved.select(col("vec_id")))
-    moved.select(embCols.map(col) :+ col("new_cid").as("cid"): _*)
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(assignPath)
-    val after = graft.plans.ManifestIO.readDir(s, assignPath)
-      .select(col("vec_id"), col("cid").as("new_cid"))
-    graft.Materialize.cut(
-      delta.select(col("vec_id"), col("old_cid")).join(after, Seq("vec_id")))
-      .withColumn("moved", col("old_cid") =!= col("new_cid"))
-  }
-
-  /** [[refreshAssignment]] under SNAPSHOT ISOLATION (q133) — the last
-    * in-place maintenance pass gains a manifest-committed form: the
-    * same Lloyd round + map-side reassignment, but the disk mutation
-    * is COPY-ON-WRITE. Cells that LOSE movers rewrite their surviving
-    * membership as NEW sibling files; movers append into their new
-    * cells as new files; the next manifest selects [unlosing cells'
-    * version-v files + every newly-landed file]
+  /** ONE IVF refresh step over a committed, cid-partitioned assignment
+    * table (q122/q133): refreshed centroids = per-cell dimension means
+    * (ivfModel's update arithmetic), a map-side reassignment under the
+    * broadcast refreshed centroid array, and a COPY-ON-WRITE move of
+    * exactly the reassigned rows. Cells that LOSE movers rewrite their
+    * surviving membership as NEW sibling files; movers append into
+    * their new cells as new files; the next manifest selects
+    * [unlosing cells' version-v files + every newly-landed file]
     * ([[graft.plans.Snapshots.commitReplacing]] with the losing cid
     * dirs as drop prefixes) — so a reader pinned to version v stays
     * byte-identical while the refreshed layout commits as v+1, and
@@ -1250,12 +1206,14 @@ object Similarity {
     // round against the CURRENT membership: new centroids = per-cell
     // dimension means (the exact ivfModel update arithmetic), then a
     // map-side reassignment under the broadcast refreshed centroids —
-    // and ONLY the vectors whose nearest cell changed move on disk
-    // (partition-local delete from the old cells + cid append into
-    // the new; cells with no movers stay byte-identical, asserted in
-    // ScaleShapeSpec). The output reads new_cid from the REFRESHED
-    // TABLE, so the oracle gate proves the disk mutation equals the
-    // reassignment — not just that the arithmetic matches. Oracle =
+    // and ONLY the vectors whose nearest cell changed move, through
+    // one manifest commit over a committed copy of the assignment
+    // (losing cells rewrite their survivors as new sibling files,
+    // movers append into their new cells; cells with no movers carry
+    // their files verbatim, asserted in ScaleShapeSpec). The output
+    // reads new_cid from the COMMITTED TABLE, so the oracle gate
+    // proves the disk mutation equals the reassignment — not just
+    // that the arithmetic matches. Oracle =
     // the kmeans CTE chain extended by exactly one update+assign
     // round. Scale: the update is one map-side-combined groupBy(cid)
     // over (k × 64) partial means; the move volume is the DRIFT, not
@@ -1267,9 +1225,9 @@ object Similarity {
       val staging = graft.Fs.createStagingDir(s, "graft-q122")
       try {
         val assignPath = s"$staging/assignment"
-        graft.plans.IndexMaintenance.copyDir(s, s"$dir/assignment",
-          assignPath)
-        refreshAssignment(s, assignPath, s"$staging/centroids")
+        graft.Fs.copyDir(s, s"$dir/assignment", assignPath)
+        graft.plans.Snapshots.commit(s, assignPath)
+        refreshAssignmentCommit(s, assignPath, s"$staging/centroids")._2
           .orderBy(col("vec_id"))
       } finally graft.Fs.deleteRecursively(staging,
         s.sparkContext.hadoopConfiguration)
@@ -1478,12 +1436,11 @@ object Similarity {
     },
 
     // SNAPSHOT-PRESERVING CENTROID REFRESH — q122's drift maintenance
-    // under manifest commits, removing the vector family's last
-    // in-place caveat: the Lloyd round and map-side reassignment are
-    // q122's exactly, but losing cells REWRITE their survivors as new
-    // sibling files and movers append into their new cells, with the
-    // next manifest selecting [unlosing cells' v1 files + the new
-    // files] — version 1 stays byte-identical (tested) while the
+    // read AS OF both versions: the Lloyd round and map-side
+    // reassignment are q122's exactly; losing cells REWRITE their
+    // survivors as new sibling files and movers append into their
+    // new cells, with the next manifest selecting [unlosing cells' v1
+    // files + the new files] — version 1 stays byte-identical (tested) while the
     // refreshed layout commits as version 2, and write amplification
     // is the touched cells, never the corpus. new_cid is re-read from
     // the COMMITTED v2 layout, so the oracle gate proves the manifest
@@ -1535,9 +1492,8 @@ object Similarity {
     },
 
     // COMMITTED IVF INDEX ROW-LEVEL DELETE — q138's tombstone + purge
-    // shape for the vector family (r15 verdict #3: the in-place delete
-    // is refused on committed datasets, so a committed IVF index had
-    // no erasure path): the resident % 7 = 0 slice (query vector
+    // shape for the vector family (the committed IVF index's erasure
+    // path): the resident % 7 = 0 slice (query vector
     // exempt) tombstones as ONE appended file inside the manifested
     // tree (v2 — nothing rewritten, deletion never retrains), then a
     // COW purge rewrites ONLY the cid partitions holding tombstoned
@@ -1670,7 +1626,7 @@ object Similarity {
       _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
     for (_ <- q.size until n) {
       val staging = graft.Fs.createStagingDir(s, "graft-ivf-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"$src/idx", s"$staging/idx")
+      graft.Fs.copyDir(s, s"$src/idx", s"$staging/idx")
       q.add(staging)
     }
   }
@@ -1684,7 +1640,7 @@ object Similarity {
     if (pre != null) pre
     else {
       val staging = graft.Fs.createStagingDir(s, "graft-ivf-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"${ivfSnapDir(s, d)}/idx",
+      graft.Fs.copyDir(s, s"${ivfSnapDir(s, d)}/idx",
         s"$staging/idx")
       staging
     }
@@ -1703,7 +1659,7 @@ object Similarity {
       _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
     for (_ <- q.size until n) {
       val staging = graft.Fs.createStagingDir(s, "graft-pq-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"$src/idx", s"$staging/idx")
+      graft.Fs.copyDir(s, s"$src/idx", s"$staging/idx")
       q.add(staging)
     }
   }
@@ -1715,7 +1671,7 @@ object Similarity {
     if (pre != null) pre
     else {
       val staging = graft.Fs.createStagingDir(s, "graft-pq-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"${pqSnapDir(s, d)}/idx",
+      graft.Fs.copyDir(s, s"${pqSnapDir(s, d)}/idx",
         s"$staging/idx")
       staging
     }

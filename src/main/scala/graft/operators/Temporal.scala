@@ -403,30 +403,30 @@ object Temporal {
     },
 
     // The FULL Z-order maintenance lifecycle under the oracle gate:
-    // cluster half the table, APPEND the other half (quantized under
-    // the saved grid — an append must not shift the residents'
+    // cluster half the table (v1), APPEND the other half (v2, quantized
+    // under the saved grid — an append must not shift the residents'
     // layout), COMPACT the fragmented zbuckets back to one z-sorted
-    // file each, and serve the box from the compacted layout. Same
-    // oracle as q101 — the driver gate proves save → append → compact
-    // → serve loses and invents nothing. Each invocation builds its
-    // own layout (the mutation IS the operator); q101 stays the
-    // serve-only path over the shared artifact.
+    // file each through a manifest commit (purgeCommit with no
+    // tombstones is the copy-on-write merge, v3), and serve the box
+    // from the current version. Same oracle as q101 — the driver gate
+    // proves save → append → compact → serve loses and invents
+    // nothing. Each invocation builds its own layout (the mutation IS
+    // the operator); q101 stays the serve-only path over the shared
+    // artifact.
     "q101b_zorder_lifecycle" -> { (s, d) =>
+      import graft.plans.ZOrderLayout
       val rows = Tables.events(s, d).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       val staging = graft.Fs.createStagingDir(s, "graft-zorder-life")
       try {
-        val src = s"$staging/layout"
-        graft.plans.ZOrderLayout.save(s,
-          rows.where(col("event_id") % 2 === 0), src)
-        graft.plans.ZOrderLayout.append(s, src,
+        val dir = s"$staging/layout"
+        val (h, _) = ZOrderLayout.saveCommit(s,
+          rows.where(col("event_id") % 2 === 0), dir)
+        ZOrderLayout.appendCommit(s, dir,
           rows.where(col("event_id") % 2 === 1))
-        val dest = s"$staging/layout_c"
-        graft.plans.ZOrderLayout.compact(s, src, dest)
-        val h = graft.plans.ZOrderLayout.load(s, dest)
+        ZOrderLayout.purgeCommit(s, dir)
         // materialized before the finally reclaims the layout files
-        graft.Materialize.cut(
-            graft.plans.ZOrderLayout.serve(s, h, 3L, 7L, 50.0, 150.0))
+        graft.Materialize.cut(ZOrderLayout.serve(s, h, 3L, 7L, 50.0, 150.0))
           .orderBy(col("event_id"))
       } finally graft.Fs.deleteRecursively(staging,
         s.sparkContext.hadoopConfiguration)

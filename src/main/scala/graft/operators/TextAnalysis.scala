@@ -515,19 +515,22 @@ object TextAnalysis {
     // (1) aggregating ONLY the batch's tokens (collection_freq and
     // doc_freq are additive over disjoint doc sets), (2) a merge join
     // bounded by the BATCH's vocabulary against the partition-PRUNED
-    // resident rows, and (3) a partition-local upsert that rewrites
-    // only the buckets the batch's terms hash into. The corpus-scale
+    // resident rows, and (3) a partition-local merge commit that
+    // rewrites only the buckets the batch's terms hash into (the
+    // private copy of the table is committed first, and every read
+    // goes through a version). The corpus-scale
     // aggregation never re-runs — at 100 TB the increment costs
     // O(batch + touched buckets). Oracle = q46's full recompute over
     // the whole corpus: the path-dependent increment must equal the
     // one-shot aggregate exactly.
     "q116_vocab_increment" -> { (s, d) =>
-      import graft.plans.IndexMaintenance
+      import graft.plans.{SnapshotTable, Snapshots}
       val src = stageVocabStats(s, d)
       val staging = graft.Fs.createStagingDir(s, "graft-q116")
       try {
         val tbl = s"$staging/vocab"
-        IndexMaintenance.copyDir(s, src, tbl)
+        graft.Fs.copyDir(s, src, tbl)
+        val v1 = Snapshots.commit(s, tbl)
         val batchAgg = Tables.documents(s, d)
           .where(pmod(col("doc_id"), lit(10)) === 0)
           .withColumn("toks", expr(toksExpr))
@@ -539,7 +542,7 @@ object TextAnalysis {
         // buckets the batch hashes into (bounded by VocabBuckets)
         val touched = batchAgg.select(col("tbucket")).distinct()
           .collect().map(_.getInt(0)).toSeq
-        val res = graft.plans.ManifestIO.readDir(s, tbl)
+        val res = Snapshots.read(s, tbl, v1)
           .where(col("tbucket").isin(touched: _*))
           .select(col("term"), col("collection_freq").as("cf_r"),
             col("doc_freq").as("df_r"))
@@ -548,9 +551,9 @@ object TextAnalysis {
             (coalesce(col("cf_r"), lit(0L)) + col("cf_b")).as("collection_freq"),
             (coalesce(col("df_r"), lit(0L)) + col("df_b")).as("doc_freq"),
             col("tbucket"))
-        IndexMaintenance.upsertPartitioned(s, tbl, Seq("tbucket"), "term",
+        val v2 = SnapshotTable.mergeCommit(s, tbl, Seq("tbucket"), "term",
           updates, partitionFromKey = true)
-        graft.Materialize.cut(graft.plans.ManifestIO.readDir(s, tbl)
+        graft.Materialize.cut(Snapshots.read(s, tbl, v2)
           .select(col("term"), col("collection_freq"), col("doc_freq")))
           .orderBy(col("term"))
       } finally graft.Fs.deleteRecursively(staging,
@@ -987,7 +990,7 @@ object TextAnalysis {
       _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
     for (_ <- q.size until n) {
       val staging = graft.Fs.createStagingDir(s, "graft-bm25-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"$src/idx", s"$staging/idx")
+      graft.Fs.copyDir(s, s"$src/idx", s"$staging/idx")
       q.add(staging)
     }
   }
@@ -1001,7 +1004,7 @@ object TextAnalysis {
     if (pre != null) pre
     else {
       val staging = graft.Fs.createStagingDir(s, "graft-bm25-snapclone")
-      graft.plans.IndexMaintenance.copyDir(s, s"${bm25SnapDir(s, d)}/idx",
+      graft.Fs.copyDir(s, s"${bm25SnapDir(s, d)}/idx",
         s"$staging/idx")
       staging
     }

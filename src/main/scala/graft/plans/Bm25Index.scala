@@ -73,63 +73,18 @@ object Bm25Index {
   /** Persist the mergeable stats row: `nDocs` total documents (token-
     * less included, matching the fresh scorer's n_docs), plus the
     * tokenized-doc count and total token length derived from the
-    * postings batch, added to `addTo` (the resident stats on append). */
+    * postings. [[save]] is the only caller and always writes a fresh
+    * index dir, so the row is written directly. */
   private def writeStats(s: SparkSession, path: String, nDocs: Long,
-      postings: DataFrame, addTo: (Long, Long, Long) = (0L, 0L, 0L)): Unit = {
+      postings: DataFrame): Unit = {
     val inc = postings.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
       .agg(count(lit(1)).as("t"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
       .head()
     import s.implicits._
-    swapIn(s, path)(fresh =>
-      Seq((addTo._1 + nDocs, addTo._2 + inc.getLong(0),
-          addTo._3 + inc.getLong(1)))
-        .toDF("n_docs", "n_tok_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite").parquet(fresh))
+    Seq((nDocs, inc.getLong(0), inc.getLong(1)))
+      .toDF("n_docs", "n_tok_docs", "sum_dl")
+      .coalesce(1).write.mode("overwrite").parquet(path)
   }
-
-  /** Crash-safe in-place replacement for the small whole-rewrite
-    * artifacts (vocabulary-sized terms, one-row stats): write the new
-    * relation to a fresh sibling path, then swap via two renames
-    * (rename is atomic per path on HDFS and the local FS). A crash
-    * before the first rename leaves the live artifact untouched; a
-    * crash BETWEEN the renames leaves nothing live at `path` — only
-    * the `.old` sibling holds the good copy, so recovery (here at
-    * entry, and in every artifact reader via [[recoverSwap]]) renames
-    * it BACK before anything is deleted. delete()'s multi-artifact
-    * update therefore degrades to at most ONE stale artifact — and
-    * because its tombstones land FIRST, every crash window is
-    * conservative: deleted docs are already invisible to serve while
-    * df/stats at worst lag one decrement (vs the previous in-place
-    * overwrite, where a crash mid-write left a torn artifact requiring
-    * an index rebuild). */
-  private def swapIn(s: SparkSession, path: String)(
-      write: String => Unit): Unit = {
-    val (fs, p) = graft.Fs.resolve(path, s.sparkContext.hadoopConfiguration)
-    val fresh = new org.apache.hadoop.fs.Path(path + ".swap")
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    // CRASH RECOVERY FIRST: if `path` is missing but `.old` exists,
-    // the previous swap died between its two renames and `.old` is the
-    // ONLY good copy — deleting it upfront (the pre-r14 behavior)
-    // would destroy the artifact instead of restoring it.
-    recoverSwap(s, path)
-    if (fs.exists(fresh)) fs.delete(fresh, true)
-    // `.old` is reclaimable only when a live artifact exists at `path`
-    if (fs.exists(p) && fs.exists(old)) fs.delete(old, true)
-    write(fresh.toString)
-    if (fs.exists(p))
-      require(fs.rename(p, old), s"swap: rename $p -> $old failed")
-    require(fs.rename(fresh, p), s"swap: rename $fresh -> $p failed")
-    fs.delete(old, true)
-  }
-
-  /** The in-place lifecycle's swap/rewrite forms DESTROY files a
-    * committed manifest still references (swapIn deletes the replaced
-    * terms/stats; compact's source read would double-count siblings) —
-    * a committed index mutates through the *Commit forms only. */
-  private def requireUncommitted(s: SparkSession, base: String,
-      op: String, instead: String): Unit =
-    require(Snapshots.current(s, base).isEmpty,
-      s"Bm25Index.$op: $base is manifest-committed — use $instead")
 
   /** Every id in `staged` must hold at least one posting in
     * `postingsRel` — the residency half of the delete contract (the
@@ -152,29 +107,6 @@ object Bm25Index {
         "postings that do not exist")
   }
 
-  /** Restore a [[swapIn]] interrupted between its two publish renames:
-    * `path` missing + `.old` present means the crash landed after
-    * rename(path -> .old) and before rename(.swap -> path), so the
-    * `.old` sibling is the only good copy — rename it back. Invoked at
-    * swapIn entry AND by every reader of a swapped artifact
-    * (append/delete/serve/compact read `path` before any swap runs, so
-    * without the read-side hook they would fail on the missing path
-    * before recovery could happen). Idempotent, two exists() calls on
-    * the happy path. */
-  private def recoverSwap(s: SparkSession, path: String): Unit = {
-    val (fs, p) = graft.Fs.resolve(path, s.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (!fs.exists(p) && fs.exists(old))
-      require(fs.rename(old, p), s"swap recovery: rename $old -> $p failed")
-  }
-
-  /** Read-side crash recovery for the two swap-replaced artifacts of
-    * an index base dir (terms, stats). */
-  private def recoverArtifacts(s: SparkSession, base: String): Unit = {
-    recoverSwap(s, s"$base/terms")
-    recoverSwap(s, s"$base/stats")
-  }
-
   private val savedDirs = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Handle]()
 
@@ -185,184 +117,15 @@ object Bm25Index {
     savedDirs.computeIfAbsent((s, IvfTopK.qualify(s, indexDir)),
       _ => save(s, sfDir, indexDir))
 
-  /** Incremental index maintenance — the lexical twin of
-    * [[IvfTopK.append]]: new documents' postings are computed with the
-    * shared tokenizer and APPENDED (dynamic-partition append — only
-    * the tbuckets the new terms land in gain files); the vocabulary-
-    * sized terms table is merged (df sums) and the one-row stats
-    * updated from the batch alone — the resident corpus is never
-    * rescanned. `newDocs` must carry (doc_id, text) with fresh doc_ids
-    * (id collisions are the caller's contract). Returns the number of
-    * appended documents. */
-  def append(s: SparkSession, indexDir: String, newDocs: DataFrame): Long = {
-    val base = IvfTopK.qualify(s, indexDir)
-    requireUncommitted(s, base, "append", "appendCommit")
-    recoverArtifacts(s, base)
-    // materialize the batch ONCE: the returned count, the postings
-    // write and the stats update come from the same evaluation
-    val staged = graft.Materialize.cut(newDocs)
-    // RE-INGEST RULE: an id on the tombstone list may not be appended —
-    // its PHYSICAL postings are still in place (delete is merge-on-
-    // read), so purging the tombstone here would resurrect the old
-    // postings alongside the new ones, and keeping it would anti-join
-    // the fresh document out of serve while its postings inflate
-    // df/avgdl. A deleted id becomes appendable only after [[compact]]
-    // purges it physically. The check is tombstone-×-batch-sized
-    // (broadcast semi-join), never corpus-sized.
-    tombstones(s, base).foreach { dels =>
-      val clash = staged.select(col("doc_id")).distinct()
-        .join(broadcast(dels), Seq("doc_id"), "left_semi").count()
-      require(clash == 0L,
-        s"append: $clash doc_id(s) are tombstoned in $base/deletes — " +
-          "re-ingest of a deleted id requires a compact() first")
-    }
-    val newPost = graft.Materialize.cut(
-      TextAnalysis.postingsOf(staged)
-        .withColumn("tbucket", tbucket(col("term"))))
-    newPost.repartition(col("tbucket"))
-      .write.mode("append").partitionBy("tbucket")
-      .parquet(s"$base/postings")
-    // vocabulary-sized read-merge-overwrite; the merged frame is CUT
-    // (materialized off the input files) before the overwrite, so the
-    // write never reads the path it is replacing
-    val newTerms = newPost.groupBy(col("term")).agg(count(lit(1)).as("df_new"))
-    val merged = graft.Materialize.cut(
-      s.read.parquet(s"$base/terms")
-        .join(newTerms, Seq("term"), "full_outer")
-        .select(col("term"),
-          (coalesce(col("df"), lit(0L)) +
-            coalesce(col("df_new"), lit(0L))).as("df")))
-    swapIn(s, s"$base/terms")(fresh =>
-      merged.write.mode("overwrite").parquet(fresh))
-    val old = s.read.parquet(s"$base/stats").head()
-    writeStats(s, s"$base/stats", staged.count(), newPost,
-      addTo = (old.getLong(0), old.getLong(1), old.getLong(2)))
-    staged.count()
-  }
-
-  /** Retention DELETE — MERGE-ON-READ tombstones, the inverted-index
-    * deletion strategy (a deleted DOCUMENT's terms hash into nearly
-    * every tbucket, so a partition-local physical rewrite degenerates
-    * to a full postings rewrite; Lucene and the lakehouse formats
-    * solve this the same way): the doc_ids land in a `deletes/`
-    * tombstone list that [[serve]] anti-joins (broadcast — tombstones
-    * are delete-sized, not corpus-sized), while the vocabulary-sized
-    * terms table and one-row stats are decremented NOW from the
-    * deleted docs' own re-tokenized postings, so served scores (df,
-    * avgdl) are exact for the survivors immediately. [[compact]]
-    * purges tombstoned rows physically and clears the list. The docs
-    * must actually be residents (double-deletion corrupts df/stats —
-    * the caller's contract, like append's fresh-ids), and a deleted id
-    * stays un-appendable until a compact() purges its physical
-    * postings ([[append]] enforces this). The three artifact updates
-    * land tombstones-FIRST and then swap terms/stats via [[swapIn]],
-    * so any crash point leaves serve conservative (deleted docs
-    * invisible, df/stats at worst one decrement stale) rather than
-    * torn. Returns the number of tombstoned documents. */
-  def delete(s: SparkSession, indexDir: String,
-      deletedDocs: DataFrame): Long = {
-    val base = IvfTopK.qualify(s, indexDir)
-    requireUncommitted(s, base, "delete", "deleteCommit")
-    recoverArtifacts(s, base)
-    val staged = graft.Materialize.cut(deletedDocs
-      .select(col("doc_id"), col("text")))
-    // DOUBLE-DELETE GUARD (the deleteCommit guard's in-place twin): an
-    // id already on the tombstone list has had its df/stats
-    // decremented once — decrementing again silently skews every
-    // surviving doc's scores. Tombstone-×-batch-sized broadcast check.
-    tombstones(s, base).foreach { dels =>
-      val clash = staged.select(col("doc_id")).distinct()
-        .join(broadcast(dels), Seq("doc_id"), "left_semi").count()
-      require(clash == 0L,
-        s"delete: $clash doc_id(s) are already tombstoned in " +
-          s"$base/deletes — a repeated delete would double-decrement " +
-          "df/stats")
-    }
-    // RESIDENCY: every staged id must hold postings in the live index
-    // — deleting a never-ingested doc_id would land df decrements and
-    // stats subtractions for postings that don't exist, silently
-    // skewing every survivor's scores forever (the tombstone guard
-    // above only catches the already-deleted half). One skinny
-    // doc_id-column scan under the broadcast id set — the same bounded
-    // probe shape as the purge pass.
-    requireResidents(s, ManifestIO.readDir(s, s"$base/postings"), staged, "delete")
-    val delPost = graft.Materialize.cut(TextAnalysis.postingsOf(staged))
-    staged.select(col("doc_id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$base/deletes")
-    // df decrement; terms whose df reaches 0 drop out (exactly what a
-    // fresh survivors-only index would hold)
-    val delDf = delPost.groupBy(col("term")).agg(count(lit(1)).as("df_del"))
-    val merged = graft.Materialize.cut(
-      s.read.parquet(s"$base/terms")
-        .join(delDf, Seq("term"), "left")
-        .select(col("term"),
-          (col("df") - coalesce(col("df_del"), lit(0L))).as("df"))
-        .where(col("df") > 0))
-    swapIn(s, s"$base/terms")(fresh =>
-      merged.write.mode("overwrite").parquet(fresh))
-    // stats subtract: mergeable sums go down as easily as up
-    val dec = delPost.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("t"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .head()
-    val n = staged.select(col("doc_id")).distinct().count()
-    val old = s.read.parquet(s"$base/stats").head()
-    import s.implicits._
-    swapIn(s, s"$base/stats")(fresh =>
-      Seq((old.getLong(0) - n, old.getLong(1) - dec.getLong(0),
-          old.getLong(2) - dec.getLong(1)))
-        .toDF("n_docs", "n_tok_docs", "sum_dl")
-        .coalesce(1).write.mode("overwrite").parquet(fresh))
-    graft.Materialize.release(merged)
-    graft.Materialize.release(delPost)
-    graft.Materialize.release(staged)
-    n
-  }
-
-  /** COMPACTION — collapse the postings back to one file per tbucket
-    * partition after append accumulation, preserving the layout the
-    * serve path's file-level pruning depends on; the vocabulary-sized
-    * terms, one-row stats and meta are copied verbatim (append already
-    * rewrites terms/stats whole, so they never fragment). Writes to a
-    * NEW directory; the swap is the caller's pointer flip. Returns the
-    * postings file count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = IvfTopK.qualify(s, srcDir)
-    requireUncommitted(s, src, "compact", "compactCommitSnapshot")
-    recoverArtifacts(s, src)
-    val dest = IvfTopK.qualify(s, destDir)
-    // compaction is where merge-on-read tombstones are PURGED: the
-    // rewrite drops tombstoned rows and the compacted index carries no
-    // deletes list (terms/stats were already decremented at delete
-    // time, so nothing else changes)
-    val n = tombstones(s, src) match {
-      case Some(dels) =>
-        ManifestIO.readDir(s, s"$src/postings")
-          .join(broadcast(dels), Seq("doc_id"), "left_anti")
-          .repartition(col("tbucket"))
-          .write.mode("overwrite").partitionBy("tbucket")
-          .parquet(s"$dest/postings")
-        graft.Fs.listDataFiles(s"$dest/postings",
-          s.sparkContext.hadoopConfiguration).size
-      case None =>
-        IndexMaintenance.compactPartitioned(s,
-          s"$src/postings", s"$dest/postings", Seq("tbucket"))
-    }
-    for (piece <- Seq("terms", "stats", "meta"))
-      IndexMaintenance.copyDir(s, s"$src/$piece", s"$dest/$piece")
-    n
-  }
-
   // --------------------------------------------------------------------
   // SNAPSHOT LIFECYCLE (manifest-committed form, q129): one manifest
   // spans the WHOLE base dir — postings, terms, stats, meta, deletes —
   // so a single version number pins every artifact consistently and
-  // "as-of" serves need no copy at all. The in-place lifecycle above
-  // swaps terms/stats destructively (older manifests would dangle);
-  // here every mutation lands ONLY new sibling files and the manifest
-  // swaps the SELECTION ([[Snapshots.commitReplacing]]), so time
-  // travel, tombstone deletes and purge compaction coexist — the full
-  // lakehouse shape the MinHash family got in q109/q113, extended to
-  // the lexical index per the round-13 advice.
+  // "as-of" serves need no copy at all. This is the index's only
+  // mutation path: every mutation lands ONLY new sibling files and the
+  // manifest swaps the SELECTION ([[Snapshots.commitReplacing]]), so
+  // time travel, tombstone deletes and purge compaction coexist — the
+  // full lakehouse shape the MinHash family got in q109/q113.
   //
   // CRASH PROTOCOL (single writer): a mutation that dies BEFORE its
   // commit leaves the current version fully intact — but its orphaned
@@ -389,7 +152,9 @@ object Bm25Index {
     Snapshots.current(s, base).getOrElse(throw new IllegalStateException(
       s"no committed snapshot under $base — commitSnapshot after save first"))
 
-  /** [[append]] under snapshot isolation. Postings append as usual
+  /** Incremental APPEND under snapshot isolation — new documents'
+    * postings are computed with the shared tokenizer and the resident
+    * corpus is never rescanned. Postings append as usual
     * (new files in the touched tbuckets only); the one-row stats
     * update reads the VERSION-v row and lands as a NEW SIBLING file
     * the next manifest selects — no swap, no crash window (a crash
@@ -411,8 +176,10 @@ object Bm25Index {
     val base = IvfTopK.qualify(s, indexDir)
     val v = currentVersion(s, base)
     val staged = graft.Materialize.cut(newDocs)
-    // RE-INGEST RULE against the CURRENT version's tombstones (same
-    // contract as the in-place append)
+    // RE-INGEST RULE against the CURRENT version's tombstones: a
+    // tombstoned id's physical postings are still in place (delete is
+    // merge-on-read), so re-appending it before a purge would
+    // resurrect the old postings alongside the new ones
     val tomb = pieceOf(s, base, v, "deletes")
     if (tomb.nonEmpty) {
       val clash = staged.select(col("doc_id")).distinct()
@@ -557,7 +324,11 @@ object Bm25Index {
     throw new IllegalStateException("unreachable")
   }
 
-  /** [[delete]] under snapshot isolation: tombstones APPEND (readers
+  /** Retention DELETE under snapshot isolation — merge-on-read
+    * tombstones, the inverted-index deletion strategy (a deleted
+    * document's terms hash into nearly every tbucket, so a physical
+    * rewrite would degenerate to a full postings rewrite): tombstones
+    * APPEND (readers
     * of older versions never see them), the vocabulary decrement lands
     * as a NEGATIVE df delta segment (the append segment's mirror —
     * sum-on-read nets it out, terms reaching 0 drop at read time), the
@@ -586,8 +357,8 @@ object Bm25Index {
         s"deleteCommit: $clash doc_id(s) are already tombstoned as of " +
           s"v$v — a repeated delete would double-decrement df/stats")
     }
-    // RESIDENCY against version v's manifested postings (the committed
-    // twin of the in-place check): a non-resident id's negative df
+    // RESIDENCY against version v's manifested postings: a
+    // non-resident id's negative df
     // segments would net every later version's scores wrong — refuse
     // loudly. Skinny doc_id projection under the broadcast id set.
     requireResidents(s,
@@ -753,18 +524,9 @@ object Bm25Index {
     TextAnalysis.bm25ScoreFrom(tf, df, stats)
   }
 
-  /** The tombstone list under an index base dir, if any. */
-  private def tombstones(s: SparkSession, base: String): Option[DataFrame] = {
-    val delDir = s"$base/deletes"
-    val (fs, p) = graft.Fs.resolve(delDir,
-      s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(delDir)) else None
-  }
-
   /** Reconstruct a handle from saved artifacts. */
   def load(s: SparkSession, indexDir: String): Handle = {
     val base = IvfTopK.qualify(s, indexDir)
-    recoverArtifacts(s, base)
     val docsPath = s.read.parquet(s"$base/meta").head().getString(0)
     Handle(docsPath, s"$base/postings", s"$base/terms", s"$base/stats")
   }
@@ -788,8 +550,6 @@ object Bm25Index {
       case Some(v) => return serveAsOf(s, base, v, queryTerms)
       case None => ()
     }
-    recoverSwap(s, h.termsPath)
-    recoverSwap(s, h.statsPath)
     // driver-side twin of the save-time tbucket column: CRC32 of the
     // UTF-8 term bytes (exactly Spark's crc32 over a string cast),
     // non-negative, so % equals pmod
@@ -798,17 +558,10 @@ object Bm25Index {
       c.update(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       java.lang.Integer.valueOf((c.getValue % Buckets).toInt)
     }.distinct
-    val tf0 = s.read.parquet(h.postingsPath)
+    val tf = s.read.parquet(h.postingsPath)
       .where(col("tbucket").isin(buckets: _*))
       .where(col("term").isin(queryTerms: _*))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-    // merge-on-read: tombstoned docs filter out here (broadcast — the
-    // list is delete-sized); compact() purges them physically
-    val tf = tombstones(s, h.postingsPath.stripSuffix("/postings")) match {
-      case Some(dels) =>
-        tf0.join(broadcast(dels), Seq("doc_id"), "left_anti")
-      case None => tf0
-    }
     val df = s.read.parquet(h.termsPath)
       .where(col("term").isin(queryTerms: _*))
     // derive avgdl with the fresh path's exact arithmetic: long sums,

@@ -110,7 +110,7 @@ object IvfTopK {
     // write-sized-for-read: one shuffle by cid so each cell dir gets
     // one file (the probe scan opens nprobe files, not nprobe × the
     // assignment job's task count); at warehouse scale a big cell
-    // sizes into several files via compact()'s target instead
+    // sizes into several files via purgeCommit's maxFiles instead
     assigned.select(cols.map(col) :+ col("cid"): _*)
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(assignPath)
@@ -202,8 +202,7 @@ object IvfTopK {
     }
 
   /** Row-level DELETE under snapshot isolation — the committed IVF
-    * index's erasure path (q138's tombstone + purge shape; the
-    * in-place [[delete]] is refused on committed datasets): the
+    * index's only erasure path (q138's tombstone + purge shape): the
     * vec_ids APPEND as a tombstone file inside the manifested tree
     * and ONE commit pins them; version-aware serves anti-join them
     * while readers pinned to older versions still see the deleted
@@ -216,8 +215,8 @@ object IvfTopK {
     val assign = s"${qualify(s, indexDir)}/assignment"
     val v = Snapshots.current(s, assign).getOrElse(
       throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $assign — the " +
-          "in-place lifecycle deletes via delete()"))
+        s"deleteCommit: no committed snapshot under $assign — commit " +
+          "the index (Snapshots.commit over its assignment dir) first"))
     val staged = graft.Materialize.cut(
       deleteIds.select(col("vec_id")).distinct())
     val tombF = manifestPieces(s, assign, v)._2
@@ -323,33 +322,6 @@ object IvfTopK {
       }.sortBy(_._1)
       IvfIndex(embPath, s"$base/assignment", cArr)
     })
-  }
-
-  /** Retention DELETE — remove vec_ids from the assignment relation by
-    * rewriting only the cid partitions that hold them (the generic
-    * partition-local erasure; centroids/meta untouched — deletion
-    * never retrains). Returns the rows removed. */
-  def delete(s: SparkSession, indexDir: String, deleteIds:
-      org.apache.spark.sql.DataFrame): Long =
-    IndexMaintenance.deletePartitioned(s,
-      s"${qualify(s, indexDir)}/assignment",
-      Seq("cid"), "vec_id", deleteIds)
-
-  /** COMPACTION — collapse the assignment relation back to one file
-    * per cid partition after append accumulation, preserving the
-    * partition layout the probe path prunes on; centroids and meta are
-    * copied verbatim. Writes to a NEW directory (the swap is the
-    * caller's pointer flip); the compacted dir serves via [[load]] /
-    * [[serveTopK]] like any saved index. Returns the assignment file
-    * count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = qualify(s, srcDir)
-    val dest = qualify(s, destDir)
-    val n = IndexMaintenance.compactPartitioned(s,
-      s"$src/assignment", s"$dest/assignment", Seq("cid"))
-    for (piece <- Seq("centroids", "meta"))
-      IndexMaintenance.copyDir(s, s"$src/$piece", s"$dest/$piece")
-    n
   }
 
   /** Incremental index maintenance — production corpora APPEND. New

@@ -73,14 +73,25 @@ object ManifestIO {
   /** Whole-DIRECTORY read with semantics identical to
     * `spark.read.parquet(dir)` (partition inference included), fed by
     * the same one driver-side enumeration instead of Spark's listing
-    * pass — for the UNCOMMITTED hot-path tables (bucketed label /
-    * vocab state, live index trees) whose hive layouts sit above the
+    * pass — for the UNCOMMITTED hot-path tables (staged resident state,
+    * live index trees) whose hive layouts sit above the
     * parallel-discovery threshold and otherwise pay a distributed
     * listing job per read. Falls back to the plain read when the
     * enumeration finds nothing, preserving the plain read's
-    * empty-directory error contract. */
+    * empty-directory error contract.
+    *
+    * A directory with committed versions is REFUSED (one stat of
+    * `_manifests/`): copy-on-write commits leave every version's files
+    * side by side on disk, so a whole-directory read would return
+    * replaced rows next to their replacements without any error. */
   def readDir(s: SparkSession, dir: String): DataFrame = {
     val conf = s.sparkContext.hadoopConfiguration
+    val (fsys, p) = graft.Fs.resolve(dir, conf)
+    if (fsys.exists(new Path(p, "_manifests")))
+      throw new IllegalStateException(
+        s"ManifestIO.readDir: $dir has committed versions — read a " +
+          "version through Snapshots.read (a directory read would see " +
+          "every version's files at once)")
     val statuses = graft.Fs.listDataFiles(dir, conf)
     if (statuses.isEmpty) s.read.parquet(dir)
     else org.apache.spark.sql.execution.datasources.GraftManifestReadBridge

@@ -33,6 +33,15 @@ import graft.operators.Dedup
   *     version-aware readers anti-join it, [[purgeCommit]] folds it
   *     into a partition-local physical purge.
   *
+  * Lifecycle: [[save]] once, then [[Snapshots.commit]] over `bands/`.
+  * Appends only ADD files ([[append]] / [[appendRows]] + a commit, or
+  * [[appendCommitRetrying]]); erasure and compaction go through the
+  * manifest-committed forms ([[deleteCommit]], [[purgeCommit]],
+  * [[compactCommitSnapshot]]), which land replacements as new sibling
+  * files and swap the selection — an existing band file is never
+  * rewritten or removed in place, so every committed version stays
+  * readable until [[Snapshots.expire]].
+  *
   * `serve` probes a batch: the batch is sketched map-side with the
   * exact q31 kernel, BROADCAST (the incremental contract is
   * batch ≪ corpus), and hash-joined against the pruned scan — no
@@ -159,7 +168,7 @@ object MinHashIndex {
   }
 
   /** RE-INGEST RULE for a committed, tombstoned index (the
-    * [[Bm25Index.append]] contract's band-index twin): a tombstoned
+    * [[Bm25Index.appendCommit]] contract's band-index twin): a tombstoned
     * id's PHYSICAL band rows are still on disk — appending it again
     * would leave duplicate rows that RESURRECT the moment
     * [[purgeCommit]] drops the tombstone list. Tombstone-×-batch-sized
@@ -177,64 +186,6 @@ object MinHashIndex {
             "— re-ingest of a deleted id requires a purgeCommit first")
       }
     }
-
-  /** DELETION — the retention/right-to-erasure pass that completes
-    * the lifecycle (save → append → compact → DELETE): remove the
-    * given doc_ids' band rows by rewriting ONLY the (band_id, kbucket)
-    * partitions that hold them. The touched-partition set is derived
-    * from a semi-join (bounded: ≤ Bands × [[KBuckets]] values
-    * regardless of delete size), the pruned scan anti-joins the id
-    * set, and the rewrite goes through DYNAMIC partition overwrite so
-    * untouched partitions' files are never rewritten — at 100 TB a
-    * deletion batch costs the partitions it lands in, not an index
-    * rewrite. Partitions emptied entirely are removed explicitly
-    * (dynamic overwrite only replaces partitions it writes). The
-    * remaining rows are materialized before the in-place overwrite
-    * (Spark cannot overwrite a path it is still reading); a warehouse
-    * deployment writes to a fresh dir + pointer-flips instead, as with
-    * compact(). Returns the number of index rows removed. */
-  def delete(s: SparkSession, indexDir: String, deleteIds: DataFrame): Long =
-    IndexMaintenance.deletePartitioned(s,
-      s"${IvfTopK.qualify(s, indexDir)}/bands",
-      Seq("band_id", "kbucket"), "doc_id", deleteIds)
-
-  /** COMPACTION — the maintenance pass the append lifecycle needs at
-    * scale: every [[append]] adds one small file per touched
-    * (band_id, kbucket) partition, so after N ingest batches a
-    * partition holds N+1 files and the serve scan's per-file
-    * open/footer cost grows linearly with ingest history. Rewrite the
-    * bands into `destDir` with ONE file per partition — a single
-    * shuffle by the partition key (each key hashes to exactly one
-    * task, so each partition directory gets exactly one writer) —
-    * preserving the (band_id, kbucket) layout the serve path's
-    * file-level pruning depends on ([[Compact.compactParquet]]'s flat
-    * rewrite would destroy it). Rows are identical, so serve/admit
-    * results are unchanged by construction — and q103b proves it
-    * end-to-end under the oracle gate. Writes to a NEW directory; the
-    * atomic swap is the caller's pointer flip, as with the flat
-    * compactor. Returns the output file count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = IvfTopK.qualify(s, srcDir)
-    val dest = IvfTopK.qualify(s, destDir)
-    val n = IndexMaintenance.compactPartitioned(s,
-      s"$src/bands", s"$dest/bands", Seq("band_id", "kbucket"))
-    IndexMaintenance.copyDir(s, s"$src/meta", s"$dest/meta")
-    n
-  }
-
-  /** Threshold-triggered partition-local compaction IN PLACE — the
-    * auto-maintenance policy under continuous ingest (q112): only
-    * (band_id, kbucket) directories whose data-file count exceeds
-    * `maxFiles` are rewritten (one file each afterwards), everything
-    * else stays byte-identical, so write amplification tracks where
-    * arrivals actually landed instead of the index size. Rows are
-    * unchanged, so serve/admit results are unaffected by
-    * construction. Returns the number of partitions rewritten. */
-  def compactInPlaceIfFragmented(s: SparkSession, indexDir: String,
-      maxFiles: Int): Int =
-    IndexMaintenance.compactIfFragmented(s,
-      s"${IvfTopK.qualify(s, indexDir)}/bands",
-      Seq("band_id", "kbucket"), maxFiles)
 
   /** Snapshot-PRESERVING compaction for a manifest-committed index
     * ([[Snapshots.compactCommit]] over the bands dir): fragmented
@@ -283,10 +234,8 @@ object MinHashIndex {
 
   /** Row-level DELETE under snapshot isolation — the tombstone +
     * purge-compaction shape ([[Bm25Index.deleteCommit]]'s lexical
-    * form) generalized to the band index, closing the committed
-    * index's erasure gap (the in-place [[delete]] is refused on a
-    * committed dataset because its dynamic-partition overwrite would
-    * dangle every older manifest): the doc_ids APPEND as a tombstone
+    * form) generalized to the band index — the index's only erasure
+    * path: the doc_ids APPEND as a tombstone
     * file under the manifested tree and ONE commit pins them, so
     * readers of version v-and-later anti-join them out (broadcast)
     * while readers pinned to older versions never see them —
@@ -301,8 +250,8 @@ object MinHashIndex {
     val bands = s"${IvfTopK.qualify(s, indexDir)}/bands"
     val v = Snapshots.current(s, bands).getOrElse(
       throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $bands — the " +
-          "in-place lifecycle deletes via delete()"))
+        s"deleteCommit: no committed snapshot under $bands — commit " +
+          "the index (Snapshots.commit over its bands dir) first"))
     val staged = graft.Materialize.cut(
       deleteIds.select(col("doc_id")).distinct())
     val tombF = manifestPieces(s, bands, v)._2
@@ -452,13 +401,13 @@ object MinHashIndex {
     } finally graft.Materialize.release(staged)
   }
 
-  /** File-level copy of a saved index (bands + meta). Mutation-testing
-    * convenience: a re-runnable query that APPENDS (the ingest-loop
-    * forms q103/q103b) clones the resident index per invocation so
-    * the shared saved artifact is never mutated — a production
-    * pipeline appends in place and doesn't need this. */
+  /** File-level copy of a saved index (bands + meta). A re-runnable
+    * query that mutates an index (the ingest-loop forms q103/q103b,
+    * q107's erasure) clones the resident index per invocation so the
+    * shared saved artifact is never mutated; a production pipeline
+    * commits its one index and mutates it through the *Commit forms. */
   def copyTo(s: SparkSession, srcDir: String, destDir: String): Unit =
-    IndexMaintenance.copyDir(s, IvfTopK.qualify(s, srcDir),
+    graft.Fs.copyDir(s, IvfTopK.qualify(s, srcDir),
       IvfTopK.qualify(s, destDir))
 
   /** Reconstruct a handle from saved artifacts — one meta row read on

@@ -11,9 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its exact file set and read THOSE files — so a reader holding
   * version N is unaffected by any later append, and a crashed writer
   * leaves only unreferenced files (invisible to every reader,
-  * reclaimed by [[expire]]). This is the general answer to the
-  * in-place caveats documented on the index maintenance passes: the
-  * pointer flip is the manifest rename, and "as-of" reads fall out for
+  * reclaimed by [[expire]]). The pointer flip is the manifest rename,
+  * and "as-of" reads fall out for
   * free (Iceberg/Delta's core idea, reduced to what a file-listing
   * manifest can carry — single writer, no schema evolution; row-level
   * deletes ride as tombstone files the index families commit INSIDE
@@ -44,13 +43,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    compare-and-swap on filesystems that refuse to rename over an
   *    existing path (HDFS, object-store committers) and detects
   *    lost updates best-effort elsewhere.
-  *  - The IN-PLACE rewriting passes (compactPartitioned /
-  *    deletePartitioned) REPLACE files, so manifests older than the
-  *    rewrite dangle — run [[expire]] up to the rewrite's commit
-  *    first. [[compactCommit]] is the snapshot-PRESERVING compaction
-  *    (merged files land as new siblings; old versions keep reading
-  *    their old files until expired). The append lifecycle (the hot
-  *    path) never rewrites.
+  *  - A commit is the ONLY way a committed dataset's existing files
+  *    are replaced: every rewrite ([[compactCommit]], the families'
+  *    purge/delete commits, [[SnapshotTable.mergeCommit]]) lands new
+  *    sibling files and swaps the selection, so no version's files are
+  *    ever modified or deleted except by [[expire]]. Whole-directory
+  *    reads ([[ManifestIO.readDir]]) refuse a committed dataset — they
+  *    would see every version's files at once. The append lifecycle
+  *    (the hot path) never rewrites.
   *
   * Versions are defined by the manifest files themselves
   * (`_manifests/v{N}.manifest`); there is no mutable CURRENT pointer
@@ -310,10 +310,8 @@ object Snapshots {
     throw new IllegalStateException("unreachable")
   }
 
-  /** COPY-ON-WRITE compaction that PRESERVES every committed snapshot
-    * — the snapshot-safe form of the in-place maintenance passes
-    * (whose contract says "rewrites dangle older manifests; expire
-    * first"). Partitions of the CURRENT version holding more than
+  /** COPY-ON-WRITE compaction that PRESERVES every committed snapshot.
+    * Partitions of the CURRENT version holding more than
     * `maxFiles` data files are merged into ONE NEW file each, written
     * as a sibling (parquet append never mutates existing files), and
     * the next manifest references [untouched old files + merged
@@ -324,8 +322,8 @@ object Snapshots {
     * coexist, and write amplification stays bounded by where appends
     * actually landed, never the table size. Integral partition keys
     * only (values parse back out of the `c=v` path segments, same
-    * contract as the in-place passes). `sortCols` re-sorts rows within
-    * each merged partition (sorted layouts — Z-order's `z` — keep
+    * contract as [[SnapshotTable.mergeCommit]]). `sortCols` re-sorts
+    * rows within each merged partition (sorted layouts — Z-order's `z` — keep
     * their row-group min/max tightness through the merge).
     * Single-writer, like [[commit]]. Returns (version,
     * partitionsRewritten) — with nothing fragmented no commit happens

@@ -219,23 +219,12 @@ object ZOrderLayout {
     staged.count()
   }
 
-  /** Retention DELETE — remove event_ids from the clustered layout by
-    * rewriting only the zbucket partitions that hold them; the saved
-    * grid (meta) is untouched, so serve's quantization is unchanged.
-    * Returns the rows removed. */
-  def delete(s: SparkSession, layoutDir: String,
-      deleteIds: DataFrame): Long =
-    IndexMaintenance.deletePartitioned(s,
-      s"${IvfTopK.qualify(s, layoutDir)}/data",
-      Seq("zbucket"), "event_id", deleteIds, sortCols = Seq("z"))
-
   // --------------------------------------------------------------------
-  // SNAPSHOT LIFECYCLE (manifest-committed form, q142) — the TABLE
-  // layout was the one lifecycle family with no [[Snapshots]]
-  // integration (its compact even wrote to a destDir with a manual
-  // pointer flip — exactly the hazard the manifest rename removes),
-  // which meant the biggest artifact of all had no time travel while
-  // every index derived FROM it did. One manifest spans `data/` —
+  // SNAPSHOT LIFECYCLE (manifest-committed form, q101b/q142) — the
+  // layout's only way to delete or compact: every rewrite lands new
+  // sibling files and a manifest commit swaps the selection, so the
+  // table has time travel like every index derived FROM it. One
+  // manifest spans `data/` —
   // the zbucket partitions plus the tombstone list the committed
   // delete appends under `data/deletes/` — so a single version number
   // pins rows + applicable deletes together; `meta/` (the quantizer
@@ -285,8 +274,8 @@ object ZOrderLayout {
     val data = s"${IvfTopK.qualify(s, layoutDir)}/data"
     val v = Snapshots.current(s, data).getOrElse(
       throw new IllegalStateException(
-        s"deleteCommit: no committed snapshot under $data — the " +
-          "in-place lifecycle deletes via delete()"))
+        s"deleteCommit: no committed snapshot under $data — save the " +
+          "layout through saveCommit first"))
     val staged = graft.Materialize.cut(
       deleteIds.select(col("event_id")).distinct())
     val tombF = pieces(s, data, v)._2
@@ -391,29 +380,6 @@ object ZOrderLayout {
     val h = load(s, layoutDir)
     serveOn(h, versionRelation(s, s"$base/data", version),
       uLo, uHi, vLo, vHi)
-  }
-
-  /** COMPACTION — collapse each zbucket partition back to one file
-    * after append accumulation, re-sorting rows by the full Morton
-    * code `z` inside each partition (appends interleave their own
-    * z-sorted files with the residents', so a straight rewrite would
-    * lose the row-group min/max tightness the clustering exists for);
-    * the one-row stats meta is copied verbatim. Writes to a NEW
-    * directory — the swap is the caller's pointer flip. Returns the
-    * data file count. */
-  def compact(s: SparkSession, srcDir: String, destDir: String): Int = {
-    val src = IvfTopK.qualify(s, srcDir)
-    // a committed layout's sibling files (post-COW) would double-count
-    // through this directory read — committed layouts compact via
-    // purgeCommit
-    require(Snapshots.current(s, s"$src/data").isEmpty,
-      s"ZOrderLayout.compact: $srcDir is manifest-committed — use " +
-        "purgeCommit (it merges fragmented partitions snapshot-safely)")
-    val dest = IvfTopK.qualify(s, destDir)
-    val n = IndexMaintenance.compactPartitioned(s,
-      s"$src/data", s"$dest/data", Seq("zbucket"), sortCols = Seq("z"))
-    IndexMaintenance.copyDir(s, s"$src/meta", s"$dest/meta")
-    n
   }
 
   /** Reconstruct a handle from the one-row stats meta. */

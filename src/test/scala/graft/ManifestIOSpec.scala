@@ -222,4 +222,38 @@ class ManifestIOSpec extends SparkSpec {
     } finally Fs.deleteRecursively(dir,
       spark.sparkContext.hadoopConfiguration)
   }
+
+  test("readDir refuses a committed directory; Snapshots.read returns " +
+      "exactly the current rows after a merge commit") {
+    val dir = Fs.createStagingDir(spark, "graft-manifestio-guard")
+    try {
+      val t = s"$dir/t"
+      spark.range(40).select(col("id"), (col("id") * 10).as("v"),
+          pmod(col("id"), lit(4)).cast("int").as("b"))
+        .write.partitionBy("b").parquet(t)
+      // uncommitted: the plain directory read is the contract
+      assert(graft.plans.ManifestIO.readDir(spark, t).count() === 40)
+      graft.plans.Snapshots.commit(spark, t)
+      // one merge commit rewrites b=1 (updates) and b=2 (a delete) as
+      // new sibling files: the old files stay on disk for v1, so a
+      // directory read would now see both copies of those buckets
+      val v2 = graft.plans.SnapshotTable.mergeCommit(spark, t, Seq("b"),
+        "id", spark.range(1, 40, 4).select(col("id"),
+          (col("id") * 10 + 1).as("v"), lit(1).as("b")),
+        deletes = Some(spark.range(6, 7).toDF("id")))
+      val err = intercept[IllegalStateException] {
+        graft.plans.ManifestIO.readDir(spark, t)
+      }
+      assert(err.getMessage.contains("Snapshots.read"),
+        s"the refusal must name the versioned read: ${err.getMessage}")
+      val expected = (0L until 40L).filter(_ != 6L).map { id =>
+        (id, if (id % 4 == 1) id * 10 + 1 else id * 10, (id % 4).toInt)
+      }.toSet
+      val got = graft.plans.Snapshots.read(spark, t, v2)
+        .select(col("id"), col("v"), col("b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got === expected)
+    } finally Fs.deleteRecursively(dir,
+      spark.sparkContext.hadoopConfiguration)
+  }
 }

@@ -403,23 +403,37 @@ class ScaleShapeSpec extends SparkSpec {
       def files() = graft.Fs.listDataFiles(dir, conf)
         .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
         .toMap
+      val v1 = graft.plans.Snapshots.commit(s, dir)
       val before = files()
-      val out = operators.Similarity.refreshAssignment(s, dir, s"$staging/cents")
-        .collect()
+      val (v2, delta) = operators.Similarity.refreshAssignmentCommit(s, dir,
+        s"$staging/cents")
+      val out = delta.collect()
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2),
           r.getBoolean(3)))).toMap
       assert(out(9L) === ((0, 1, true)), s"stray row did not move: $out")
       assert(out.filterKeys(_ != 9L).values.forall(v => !v._3),
         s"non-drifted rows moved: $out")
+      // cell 2 had no movers in or out — its v1 files carry VERBATIM
+      // into v2's manifest and stay byte-identical on disk (a
+      // full-table rewrite would select new files for it)
+      def cell(v: Int, c: Int) = graft.plans.Snapshots.files(s, dir, v)
+        .filter(_.contains(s"cid=$c/")).toSet
+      assert(cell(v1, 2).nonEmpty && cell(v2, 2) == cell(v1, 2),
+        "refresh re-selected a cell with no movers")
       val after = files()
-      // cell 2 had no movers in or out — its files survive the refresh
-      // byte-identical (a full-table rewrite would replace them)
-      val untouched = after.keys.filter(_.contains("cid=2"))
-      assert(untouched.nonEmpty &&
-        untouched.forall(p => before.get(p) == after.get(p)),
+      assert(before.filter(_._1.contains("cid=2/")).forall {
+        case (p, st) => after.get(p).contains(st) },
         "refresh rewrote a cell with no movers")
-      // the mutated table agrees with the reported delta
-      val cidOf = s.read.parquet(dir).select($"vec_id", $"cid")
+      // the losing cell's files were replaced in v2, the gaining cell
+      // kept its v1 files and gained one
+      assert((cell(v2, 0) & cell(v1, 0)).isEmpty,
+        "the losing cell still selects its pre-refresh files")
+      assert(cell(v1, 1).subsetOf(cell(v2, 1)) &&
+        cell(v2, 1).size == cell(v1, 1).size + 1,
+        "the gaining cell should keep its files and gain the mover's")
+      // the committed table agrees with the reported delta
+      val cidOf = graft.plans.Snapshots.read(s, dir, v2)
+        .select($"vec_id", $"cid")
         .as[(Long, Int)].collect().toMap
       assert(cidOf(9L) === 1 && cidOf(1L) === 0 && cidOf(21L) === 2,
         s"on-disk assignment wrong after refresh: $cidOf")
@@ -1231,25 +1245,26 @@ class ScaleShapeSpec extends SparkSpec {
       val rows = Tables.events(s, sf).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       val src = s"$staging/layout"
-      graft.plans.ZOrderLayout.save(s, rows.where(col("event_id") % 3 === 0), src)
-      graft.plans.ZOrderLayout.append(s, src, rows.where(col("event_id") % 3 === 1))
-      graft.plans.ZOrderLayout.append(s, src, rows.where(col("event_id") % 3 === 2))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/data", conf).size
-      val dest = s"$staging/layout_c"
-      val nOut = graft.plans.ZOrderLayout.compact(s, src, dest)
-      assert(nOut < nIn,
+      val z = graft.plans.ZOrderLayout
+      z.saveCommit(s, rows.where(col("event_id") % 3 === 0), src)
+      z.appendCommit(s, src, rows.where(col("event_id") % 3 === 1))
+      val v = z.appendCommit(s, src, rows.where(col("event_id") % 3 === 2))
+      val data = s"${graft.plans.IvfTopK.qualify(s, src)}/data"
+      val nIn = graft.plans.Snapshots.files(s, data, v).size
+      // no tombstones: the purge is the copy-on-write merge of every
+      // fragmented zbucket
+      val v2 = z.purgeCommit(s, src)
+      val nOut = graft.plans.Snapshots.files(s, data, v2).size
+      assert(v2 > v && nOut < nIn,
         s"compaction did not shrink the data file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.ZOrderLayout.serve(s,
-          graft.plans.ZOrderLayout.load(s, dir), 3L, 7L, 50.0, 150.0)
+      def servedAsOf(w: Int) = z.serveAsOf(s, src, w, 3L, 7L, 50.0, 150.0)
         .select("event_id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
         .collect().sorted.toSeq
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = servedAsOf(v)
+      assert(before.nonEmpty && servedAsOf(v2) == before,
         "compacted layout diverges from the pre-compaction serve")
       // box pruning still opens strictly fewer files than the layout holds
-      val box = graft.plans.ZOrderLayout.serve(s,
-        graft.plans.ZOrderLayout.load(s, dest), 3L, 7L, 50.0, 150.0)
+      val box = z.serve(s, z.load(s, src), 3L, 7L, 50.0, 150.0)
       box.collect()
       import org.apache.spark.sql.execution.FileSourceScanExec
       import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -1319,23 +1334,22 @@ class ScaleShapeSpec extends SparkSpec {
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val src = s"$staging/idx"
       graft.plans.MinHashIndex.save(s, resident, s"$sf/documents.parquet", src)
-      val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(s"$src/bands", conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      val n = graft.plans.MinHashIndex.delete(s, src,
+      val bands = s"${graft.plans.IvfTopK.qualify(s, src)}/bands"
+      val v1 = graft.plans.Snapshots.commit(s, bands)
+      graft.plans.MinHashIndex.deleteCommit(s, src,
         resident.where(pmod(col("doc_id"), lit(7)) === 0)
           .select(col("doc_id")))
-      assert(n > 0, "delete removed no index rows — fixture rot?")
-      val after = files()
-      // delete locality: some partitions' files survive byte-identical
-      // (same path, length, mtime) — an index-wide rewrite would
-      // replace every file
-      val untouched = after.count { case (p, meta) =>
-        before.get(p).contains(meta) }
-      assert(untouched > 0,
-        s"every partition was rewritten (${before.size} -> ${after.size}) — no delete locality")
+      val v3 = graft.plans.MinHashIndex.purgeCommit(s, src)
+      val before = graft.plans.Snapshots.files(s, bands, v1).toSet
+      val after = graft.plans.Snapshots.files(s, bands, v3).toSet
+      // delete locality: some partitions' files carry verbatim into the
+      // purged version, the partitions holding deleted rows get new
+      // files — an index-wide rewrite would replace every file
+      val untouched = (after & before).size
+      assert(untouched > 0 && untouched < before.size,
+        s"purge locality broken: $untouched of ${before.size} files kept")
+      assert(!after.exists(_.startsWith(s"$bands/deletes/")),
+        "the purge left the tombstone list in the manifest")
       // the surviving index must serve exactly what a fresh index over
       // the surviving residents serves
       val freshDir = s"$staging/fresh"
@@ -1361,74 +1375,31 @@ class ScaleShapeSpec extends SparkSpec {
       val docs = Tables.documents(s, sf)
       docs.write.parquet(s"$staging/corpus/documents.parquet")
       val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
-      val n = graft.plans.Bm25Index.delete(s, src,
-        docs.where(pmod(col("doc_id"), lit(7)) === 0))
-      assert(n > 0, "delete tombstoned no docs — fixture rot?")
+      val bm = graft.plans.Bm25Index
+      bm.save(s, s"$staging/corpus", src)
+      bm.commitSnapshot(s, src)
+      bm.deleteCommit(s, src, docs.where(pmod(col("doc_id"), lit(7)) === 0))
       // a fresh index over the survivors is the ground truth: df,
       // avgdl and the tombstone filter must all line up
       docs.where(pmod(col("doc_id"), lit(7)) =!= 0)
         .write.parquet(s"$staging/surv/documents.parquet")
       val freshDir = s"$staging/fresh"
-      graft.plans.Bm25Index.save(s, s"$staging/surv", freshDir)
-      def servedFrom(dir: String) = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dir),
+      bm.save(s, s"$staging/surv", freshDir)
+      def servedFrom(dir: String) = bm.serve(s, bm.load(s, dir),
           operators.TextAnalysis.Bm25QueryTerms)
         .orderBy(col("doc_id")).collect().map(_.toString).toSeq
       val got = servedFrom(src)
       assert(got.nonEmpty && got == servedFrom(freshDir),
         "tombstoned serve diverges from the fresh survivors-only index")
-      // compaction purges: the compacted index has no deletes list and
-      // serves identically
-      val dest = s"$staging/idx_c"
-      graft.plans.Bm25Index.compact(s, src, dest)
-      val (fs, p) = graft.Fs.resolve(s"$dest/deletes",
-        s.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(p), "compaction left the tombstone list behind")
-      assert(servedFrom(dest) == got,
+      // compaction purges: the compacted version selects no deletes
+      // list and serves identically
+      val v = bm.compactCommitSnapshot(s, src)
+      val base = graft.plans.IvfTopK.qualify(s, src)
+      assert(!graft.plans.Snapshots.files(s, base, v)
+        .exists(_.startsWith(s"$base/deletes/")),
+        "compaction left the tombstone list in the manifest")
+      assert(servedFrom(src) == got,
         "post-purge serve diverges from the tombstoned serve")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
-    }
-  }
-
-  test("BM25 swap crash recovery: a .old-only artifact is restored, not destroyed") {
-    // simulate a crash between swapIn's two publish renames: the live
-    // artifact is gone and only the `.old` sibling holds the good copy.
-    // Pre-r14 the next swap DELETED `.old` upfront (destroying the only
-    // copy) and readers failed on the missing path before any reclaim;
-    // now every entry point restores it first (r13 advice, medium).
-    val s = spark
-    val staging = java.nio.file.Files.createTempDirectory("bm25_crash").toString
-    try {
-      val docs = Tables.documents(s, sf)
-      docs.write.parquet(s"$staging/corpus/documents.parquet")
-      val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
-      def served() = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, src),
-          operators.TextAnalysis.Bm25QueryTerms)
-        .orderBy(col("doc_id")).collect().map(_.toString).toSeq
-      val before = served()
-      assert(before.nonEmpty, "fixture served nothing — rot?")
-      val (fs, terms) = graft.Fs.resolve(s"$src/terms",
-        s.sparkContext.hadoopConfiguration)
-      val old = new org.apache.hadoop.fs.Path(s"$src/terms.old")
-      // the crash window: terms -> terms.old done, .swap -> terms not
-      assert(fs.rename(terms, old), "test setup rename failed")
-      assert(!fs.exists(terms) && fs.exists(old))
-      // read-side recovery: serve restores the artifact and answers
-      assert(served() == before,
-        "post-crash serve diverges from the pre-crash index")
-      assert(fs.exists(terms) && !fs.exists(old),
-        "recovery did not restore terms from the .old sibling")
-      // write-side recovery at swapIn entry: crash again, then run a
-      // delete (whose terms swap would have deleted .old upfront)
-      assert(fs.rename(terms, old), "test setup rename failed")
-      val n = graft.plans.Bm25Index.delete(s, src,
-        docs.where(pmod(col("doc_id"), lit(7)) === 0))
-      assert(n > 0 && fs.exists(terms),
-        "delete after a simulated swap crash lost the terms artifact")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -1589,14 +1560,6 @@ class ScaleShapeSpec extends SparkSpec {
       assert(asOf == rows(
         graft.plans.MinHashIndex.serveAsOf(s, idx, v2, probe)),
         "compaction changed served rows")
-      // an IN-PLACE rewrite on the committed index must refuse loudly —
-      // it would delete files versions v2/v3 still reference
-      val e = intercept[IllegalArgumentException] {
-        graft.plans.MinHashIndex.delete(s, idx,
-          docs.limit(1).select(col("doc_id")))
-      }
-      assert(e.getMessage.contains("manifest-committed"),
-        s"wrong refusal message: ${e.getMessage}")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -1759,39 +1722,42 @@ class ScaleShapeSpec extends SparkSpec {
       val docs = Tables.documents(s, sf)
       docs.write.parquet(s"$staging/corpus/documents.parquet")
       val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
+      val bm = graft.plans.Bm25Index
+      bm.save(s, s"$staging/corpus", src)
+      bm.commitSnapshot(s, src)
       val deleted = docs.where(pmod(col("doc_id"), lit(7)) === 0)
-      assert(graft.plans.Bm25Index.delete(s, src, deleted) > 0)
+      bm.deleteCommit(s, src, deleted)
       // a tombstoned id's physical postings are still resident
       // (merge-on-read) — re-appending it would either resurrect the
       // old postings or inflate df/avgdl while staying anti-joined
       // out of serve, so append must REFUSE the id loudly
+      val one = deleted.orderBy(col("doc_id")).limit(1)
       val clash = intercept[IllegalArgumentException] {
-        graft.plans.Bm25Index.append(s, src, deleted.limit(1))
+        bm.appendCommit(s, src, one)
       }
       assert(clash.getMessage.contains("tombstoned"))
       // and a REPEATED delete refuses too (it would decrement df/stats
-      // a second time — the deleteCommit guard's in-place twin)
+      // a second time)
       val dd = intercept[IllegalArgumentException] {
-        graft.plans.Bm25Index.delete(s, src, deleted.limit(1))
+        bm.deleteCommit(s, src, one)
       }
       assert(dd.getMessage.contains("already tombstoned"))
-      // compact purges the physical postings and clears the list;
+      // the purge compaction drops the physical postings and the list;
       // the id becomes appendable again and scores like a fresh doc
-      val dest = s"$staging/idx_c"
-      graft.plans.Bm25Index.compact(s, src, dest)
-      val one = deleted.limit(1)
-      graft.plans.Bm25Index.append(s, dest, one)
+      bm.compactCommitSnapshot(s, src)
+      val v = bm.appendCommit(s, src, one)
       val backId = one.head().getLong(0)
-      val served = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dest),
+      val served = bm.serve(s, bm.load(s, src),
           operators.TextAnalysis.Bm25QueryTerms)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
       // the re-ingested doc is servable again iff it matches the
-      // query terms; at minimum serve must not throw and the index
-      // must contain its postings — assert via the terms relation
-      val hasPostings = s.read.parquet(s"$dest/postings")
-        .where(col("doc_id") === backId).count() > 0
+      // query terms; at minimum serve must not throw and the current
+      // version must contain its postings
+      val base = graft.plans.IvfTopK.qualify(s, src)
+      val postings = graft.plans.Snapshots.files(s, base, v)
+        .filter(_.startsWith(s"$base/postings/"))
+      val hasPostings = graft.plans.ManifestIO.read(s, s"$base/postings",
+        postings).where(col("doc_id") === backId).count() > 0
       assert(hasPostings, s"re-ingested doc $backId has no postings")
       assert(served.nonEmpty)
     } finally {
@@ -2461,131 +2427,99 @@ class ScaleShapeSpec extends SparkSpec {
       new java.io.File(staging))
   }
 
-  test("upsertPartitioned: partition-local merge — untouched buckets survive " +
-      "byte-identical, moves empty their source partition") {
+  test("mergeCommit deletes leg: old version byte-identical, emptied partition dropped") {
     val s = spark
     import s.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("upsert_part").toString
+    import graft.plans.{SnapshotTable, Snapshots}
+    val staging = java.nio.file.Files.createTempDirectory("merge_commit").toString
     try {
       val dir = s"$staging/data"
-      // 4 buckets: b0={1,2}, b1={11}, b2={21,22}, b3={31}
-      Seq((1L, 100L, 0), (2L, 200L, 0), (11L, 110L, 1),
-          (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3))
-        .toDF("id", "v", "b")
-        .repartition(col("b"))
+      val base = Set((1L, 100L, 0), (2L, 200L, 0), (11L, 110L, 1),
+        (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3),
+        (41L, 410L, 4), (42L, 420L, 4))
+      base.toSeq.toDF("id", "v", "b").repartition(col("b"))
         .write.partitionBy("b").parquet(dir)
+      val v1 = Snapshots.commit(s, dir)
       val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(dir, conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      // update id=1 in place (touches b0), MOVE id=11 from b1 to b0
-      // (b1 empties), insert id=41 into b3; b2 is untouched
-      val n = graft.plans.IndexMaintenance.upsertPartitioned(s, dir,
-        Seq("b"), "id",
-        Seq((1L, 101L, 0), (11L, 111L, 0), (41L, 410L, 3))
-          .toDF("id", "v", "b"))
-      assert(n == 5, s"expected 5 rows written (b0: 3, b3: 2), got $n")
-      val after = files()
-      // locality: b2's file survives byte-identical (same path, length,
-      // mtime) — a table-wide rewrite would replace every file
-      val untouched = after.keys.filter(_.contains("b=2"))
-      assert(untouched.nonEmpty &&
-        untouched.forall(p => before.get(p) == after.get(p)),
-        "the untouched bucket was rewritten — no upsert locality")
-      // the emptied source bucket is gone (dynamic overwrite alone
-      // would leave its stale file to resurrect)
-      assert(!after.keys.exists(_.contains("b=1")),
-        "emptied partition b=1 still has files")
-      val got = s.read.parquet(dir).as[(Long, Long, Int)].collect().toSet
-      assert(got === Set((1L, 101L, 0), (2L, 200L, 0), (11L, 111L, 0),
-        (21L, 210L, 2), (22L, 220L, 2), (31L, 310L, 3), (41L, 410L, 3)),
-        s"merged rows wrong: $got")
-      // partitionFromKey fast path: partition is a pure function of
-      // the key here (each id stays in its bucket), so the touched set
-      // comes from the update rows alone — same merge result, and the
-      // still-untouched bucket again survives byte-identical
-      val before2 = files()
-      val n2 = graft.plans.IndexMaintenance.upsertPartitioned(s, dir,
-        Seq("b"), "id",
-        Seq((2L, 201L, 0), (51L, 510L, 2)).toDF("id", "v", "b"),
+      def stats(fs: Iterable[String]) = fs.map { f =>
+        val st = graft.Fs.resolve(f, conf)._1.getFileStatus(
+          new org.apache.hadoop.fs.Path(f))
+        f -> (st.getLen, st.getModificationTime)
+      }.toMap
+      def part(v: Int, b: Int) = Snapshots.files(s, dir, v)
+        .filter(_.contains(s"/b=$b/")).toSet
+      def rows(v: Int) = Snapshots.read(s, dir, v)
+        .as[(Long, Long, Int)].collect().toSet
+      val v1Stats = stats(Snapshots.files(s, dir, v1))
+      // deletes: 11 empties b1, 41 thins b4; updates: 1 is replaced in
+      // b0, 32 is inserted into b3; b2 is untouched. Touched partitions
+      // come from the resident semi-join (partitionFromKey = false).
+      val v2 = SnapshotTable.mergeCommit(s, dir, Seq("b"), "id",
+        Seq((1L, 101L, 0), (32L, 320L, 3)).toDF("id", "v", "b"),
+        deletes = Some(Seq(11L, 41L).toDF("id")))
+      assert(v2 == v1 + 1, s"expected one commit, got v$v1 -> v$v2")
+      assert(rows(v2) === base -- Set((1L, 100L, 0), (11L, 110L, 1),
+        (41L, 410L, 4)) ++ Set((1L, 101L, 0), (32L, 320L, 3)),
+        s"merged rows wrong: ${rows(v2)}")
+      // the base version reads back byte-identical: same rows, and
+      // every v1 file still on disk unchanged
+      assert(rows(v1) === base, "v1 rows changed under the merge")
+      assert(stats(Snapshots.files(s, dir, v1)) == v1Stats,
+        "a v1 file was modified or removed by the merge")
+      // only touched partitions get new files; the untouched one
+      // carries its files verbatim, the emptied one drops out
+      val added = Snapshots.files(s, dir, v2).toSet --
+        Snapshots.files(s, dir, v1)
+      assert(added.nonEmpty && added.forall(f =>
+        Seq(0, 3, 4).exists(b => f.contains(s"/b=$b/"))),
+        s"new files outside the touched partitions: $added")
+      assert(part(v2, 2) == part(v1, 2) && part(v1, 2).nonEmpty,
+        "the untouched partition was re-selected")
+      assert(part(v2, 1).isEmpty, "emptied partition b=1 still selected")
+      // partitionFromKey: the touched set derives from the update and
+      // delete rows alone (deletes then carry the partition column)
+      val r2 = rows(v2)
+      val v3 = SnapshotTable.mergeCommit(s, dir, Seq("b"), "id",
+        Seq((22L, 221L, 2)).toDF("id", "v", "b"),
+        deletes = Some(Seq((2L, 0)).toDF("id", "b")),
         partitionFromKey = true)
-      assert(n2 == 6, s"expected 6 rows written (b0: 3, b2: 3), got $n2")
-      val after2 = files()
-      val untouched2 = after2.keys.filter(_.contains("b=3"))
-      assert(untouched2.nonEmpty &&
-        untouched2.forall(p => before2.get(p) == after2.get(p)),
-        "partitionFromKey rewrote an untouched bucket")
-      val got2 = s.read.parquet(dir).as[(Long, Long, Int)].collect().toSet
-      assert(got2 === Set((1L, 101L, 0), (2L, 201L, 0), (11L, 111L, 0),
-        (21L, 210L, 2), (22L, 220L, 2), (51L, 510L, 2),
-        (31L, 310L, 3), (41L, 410L, 3)), s"fast-path merge wrong: $got2")
+      assert(rows(v3) === r2 -- Set((2L, 200L, 0), (22L, 220L, 2)) +
+        ((22L, 221L, 2)), s"fast-path merge wrong: ${rows(v3)}")
+      for (b <- Seq(3, 4))
+        assert(part(v3, b) == part(v2, b),
+          s"partitionFromKey re-selected untouched partition b=$b")
+      assert(rows(v2) === r2 && rows(v1) === base,
+        "older versions changed under the second merge")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
   }
 
-  test("compactIfFragmented: only over-threshold partitions rewritten, " +
-      "rows identical, file growth capped") {
+  test("mergeCommit refuses non-integral partition columns (Hive path escaping)") {
     val s = spark
     import s.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("autocompact").toString
+    val staging = java.nio.file.Files.createTempDirectory("merge_guard").toString
     try {
       val dir = s"$staging/data"
-      def append(rows: Seq[(Long, Long, Int)]): Unit =
-        rows.toDF("id", "v", "b").repartition(col("b"))
-          .write.mode("append").partitionBy("b").parquet(dir)
-      // b=0 accumulates 3 files (fragmented); b=1 stays at 2 (under)
-      append(Seq((1L, 10L, 0), (101L, 11L, 1)))
-      append(Seq((2L, 20L, 0), (102L, 21L, 1)))
-      append(Seq((3L, 30L, 0)))
-      val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(dir, conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      assert(before.keys.count(_.contains("b=0")) == 3 &&
-        before.keys.count(_.contains("b=1")) == 2, s"fixture rot: $before")
-      val n = graft.plans.IndexMaintenance.compactIfFragmented(
-        s, dir, Seq("b"), maxFiles = 2)
-      assert(n == 1, s"expected 1 partition rewritten, got $n")
-      val after = files()
-      // the fragmented partition collapsed to one file...
-      assert(after.keys.count(_.contains("b=0")) == 1,
-        s"b=0 not compacted: ${after.keys.filter(_.contains("b=0"))}")
-      // ...the under-threshold partition survives byte-identical
-      val b1 = after.keys.filter(_.contains("b=1"))
-      assert(b1.size == 2 && b1.forall(p => before.get(p) == after.get(p)),
-        "under-threshold partition was rewritten")
-      val got = s.read.parquet(dir).as[(Long, Long, Int)].collect().toSet
-      assert(got === Set((1L, 10L, 0), (2L, 20L, 0), (3L, 30L, 0),
-        (101L, 11L, 1), (102L, 21L, 1)), s"rows changed: $got")
-      // idempotent: nothing left over threshold
-      assert(graft.plans.IndexMaintenance.compactIfFragmented(
-        s, dir, Seq("b"), maxFiles = 2) == 0)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
-    }
-  }
-
-  test("deletePartitioned refuses non-integral partition columns (Hive path escaping)") {
-    val s = spark
-    import s.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("delpart_guard").toString
-    try {
       Seq((1L, "a x"), (2L, "b%2"), (3L, "a x"))
         .toDF("id", "part")
-        .write.partitionBy("part").parquet(s"$staging/data")
+        .write.partitionBy("part").parquet(dir)
+      val v1 = graft.plans.Snapshots.commit(s, dir)
       val err = intercept[IllegalArgumentException] {
-        graft.plans.IndexMaintenance.deletePartitioned(s, s"$staging/data",
-          Seq("part"), "id", Seq(1L).toDF("id"))
+        graft.plans.SnapshotTable.mergeCommit(s, dir, Seq("part"), "id",
+          Seq((4L, "a x")).toDF("id", "part"),
+          deletes = Some(Seq(1L).toDF("id")))
       }
       // string partition values are Hive path-escaped on disk; the
-      // emptied-dir cleanup builds raw "$c=$v" paths, so the guard
-      // must refuse before any rewrite happens
+      // manifest swap builds raw "$c=$v" drop prefixes, so the guard
+      // must refuse before anything lands or commits
       assert(err.getMessage.contains("integral"))
-      assert(s.read.parquet(s"$staging/data").count() == 3,
-        "guard must refuse BEFORE mutating the layout")
+      assert(graft.plans.Snapshots.current(s, dir).contains(v1),
+        "guard must refuse BEFORE committing")
+      assert(graft.Fs.listDataFiles(dir,
+        s.sparkContext.hadoopConfiguration).size ==
+        graft.plans.Snapshots.files(s, dir, v1).size,
+        "guard must refuse BEFORE landing files")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     }
@@ -2599,29 +2533,31 @@ class ScaleShapeSpec extends SparkSpec {
         .write.parquet(s"$staging/embeddings.parquet")
       val src = s"$staging/idx"
       graft.plans.IvfTopK.registerIndex(s, staging, Some(src))
-      val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(s"$src/assignment", conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
-      val assign = s.read.parquet(s"$src/assignment")
+      val assignDir = s"${graft.plans.IvfTopK.qualify(s, src)}/assignment"
+      val assign = s.read.parquet(assignDir)
       assume(assign.select(col("cid")).distinct().count() >= 2,
         "locality needs >= 2 cells")
       // delete a handful of vectors from ONE cell (not query vec 0),
-      // so locality is provable: other cells' files must survive
+      // so locality is provable: other cells' files must carry over
       val someCid = assign.where(col("vec_id") =!= 0)
         .select(col("cid")).head().getInt(0)
       val delIds = assign
         .where(col("cid") === someCid && col("vec_id") =!= 0)
         .select(col("vec_id")).limit(3)
         .collect().map(_.getLong(0))
+      assert(delIds.nonEmpty, "no vectors to delete — fixture rot?")
       import s.implicits._
-      val n = graft.plans.IvfTopK.delete(s, src,
-        delIds.toSeq.toDF("vec_id"))
-      assert(n === delIds.length && n > 0)
-      val after = files()
-      assert(after.count { case (p, m) => before.get(p).contains(m) } > 0,
-        "every cid partition was rewritten — no delete locality")
+      val snaps = graft.plans.Snapshots
+      val v1 = snaps.commit(s, assignDir)
+      graft.plans.IvfTopK.deleteCommit(s, src, delIds.toSeq.toDF("vec_id"))
+      val v3 = graft.plans.IvfTopK.purgeCommit(s, src)
+      assert(snaps.read(s, assignDir, v1).count() -
+        snaps.read(s, assignDir, v3).count() == delIds.length,
+        "the purge did not erase exactly the deleted vectors")
+      val before = snaps.files(s, assignDir, v1).toSet
+      val kept = before & snaps.files(s, assignDir, v3).toSet
+      assert(kept.nonEmpty && kept.size < before.size,
+        "the purge re-selected every cid partition (or none) — no delete locality")
       val served = graft.plans.IvfTopK.serveTopK(s, src)
         .collect().map(r => r.getLong(0)).toSet
       assert(served.nonEmpty && (served & delIds.toSet).isEmpty,
@@ -2638,18 +2574,22 @@ class ScaleShapeSpec extends SparkSpec {
       val rows = Tables.events(s, sf).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"))
       val src = s"$staging/layout"
-      graft.plans.ZOrderLayout.save(s, rows, src)
-      val conf = s.sparkContext.hadoopConfiguration
-      def files() = graft.Fs.listDataFiles(s"$src/data", conf)
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime))
-        .toMap
-      val before = files()
+      val z = graft.plans.ZOrderLayout
+      val (_, v1) = z.saveCommit(s, rows, src)
       val delIds = rows.where(col("user_id") === 3).select(col("event_id"))
-      val n = graft.plans.ZOrderLayout.delete(s, src, delIds)
-      assert(n === delIds.count() && n > 0)
-      val after = files()
-      assert(after.count { case (p, m) => before.get(p).contains(m) } > 0,
-        "every zbucket was rewritten — no delete locality")
+      val nDel = delIds.count()
+      assert(nDel > 0, "no rows to delete — fixture rot?")
+      z.deleteCommit(s, src, delIds)
+      val v3 = z.purgeCommit(s, src)
+      val data = s"${graft.plans.IvfTopK.qualify(s, src)}/data"
+      val snaps = graft.plans.Snapshots
+      assert(snaps.read(s, data, v1).count() -
+        snaps.read(s, data, v3).count() == nDel,
+        "the purge did not erase exactly the deleted rows")
+      val before = snaps.files(s, data, v1).toSet
+      val kept = before & snaps.files(s, data, v3).toSet
+      assert(kept.nonEmpty && kept.size < before.size,
+        "the purge re-selected every zbucket (or none) — no delete locality")
       val h = graft.plans.ZOrderLayout.load(s, src)
       val served = graft.plans.ZOrderLayout.serve(s, h, 0L, Long.MaxValue,
           Double.MinValue, Double.MaxValue)
@@ -2674,30 +2614,31 @@ class ScaleShapeSpec extends SparkSpec {
       val probe = docs.where(pmod(col("doc_id"), lit(10)) === 0)
       val src = s"$staging/idx"
       // base + two appends: each append adds one small file per
-      // touched partition — the accumulation compact() exists to undo
-      graft.plans.MinHashIndex.save(s,
-        resident.where(col("doc_id") % 3 === 1), s"$sf/documents.parquet", src)
-      graft.plans.MinHashIndex.append(s, src,
-        resident.where(col("doc_id") % 3 === 2))
-      graft.plans.MinHashIndex.append(s, src,
-        resident.where(col("doc_id") % 3 === 0))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/bands", conf).size
-      val dest = s"$staging/idx_c"
-      val nOut = graft.plans.MinHashIndex.compact(s, src, dest)
-      assert(nOut < nIn,
+      // touched partition — the accumulation compaction exists to undo
+      val mh = graft.plans.MinHashIndex
+      val snaps = graft.plans.Snapshots
+      mh.save(s, resident.where(col("doc_id") % 3 === 1),
+        s"$sf/documents.parquet", src)
+      val bands = s"${graft.plans.IvfTopK.qualify(s, src)}/bands"
+      snaps.commit(s, bands)
+      mh.append(s, src, resident.where(col("doc_id") % 3 === 2))
+      snaps.commit(s, bands)
+      mh.append(s, src, resident.where(col("doc_id") % 3 === 0))
+      val v = snaps.commit(s, bands)
+      val nIn = snaps.files(s, bands, v).size
+      val (v2, rewritten) = mh.compactCommitSnapshot(s, src)
+      val nOut = snaps.files(s, bands, v2).size
+      assert(rewritten > 0 && nOut < nIn,
         s"compaction did not shrink the file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.MinHashIndex.serve(s,
-          graft.plans.MinHashIndex.load(s, dir), probe)
+      def servedAsOf(w: Int) = mh.serveAsOf(s, src, w, probe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = servedAsOf(v)
+      assert(before.nonEmpty && servedAsOf(v2) == before,
         "compacted index diverges from the pre-compaction serve")
-      // the rewrite must keep the (band_id, kbucket) layout the serve
+      // the merge must keep the (band_id, kbucket) layout the serve
       // path's file-level pruning reads as partition filters
-      val plan = graft.plans.MinHashIndex.serve(s,
-          graft.plans.MinHashIndex.load(s, dest), probe)
+      val plan = mh.serve(s, mh.load(s, src), probe)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("kbucket"),
         s"pruning lost after compaction:\n${plan.take(1200)}")
@@ -2715,24 +2656,26 @@ class ScaleShapeSpec extends SparkSpec {
       docs.where(col("doc_id") % 3 === 0)
         .write.parquet(s"$staging/corpus/documents.parquet")
       val src = s"$staging/idx"
-      graft.plans.Bm25Index.save(s, s"$staging/corpus", src)
-      graft.plans.Bm25Index.append(s, src, docs.where(col("doc_id") % 3 === 1))
-      graft.plans.Bm25Index.append(s, src, docs.where(col("doc_id") % 3 === 2))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/postings", conf).size
-      val dest = s"$staging/idx_c"
-      val nOut = graft.plans.Bm25Index.compact(s, src, dest)
+      val bm = graft.plans.Bm25Index
+      bm.save(s, s"$staging/corpus", src)
+      bm.commitSnapshot(s, src)
+      bm.appendCommit(s, src, docs.where(col("doc_id") % 3 === 1))
+      val v = bm.appendCommit(s, src, docs.where(col("doc_id") % 3 === 2))
+      val base = graft.plans.IvfTopK.qualify(s, src)
+      def postings(w: Int) = graft.plans.Snapshots.files(s, base, w)
+        .count(_.startsWith(s"$base/postings/"))
+      val nIn = postings(v)
+      val v2 = bm.compactCommitSnapshot(s, src)
+      val nOut = postings(v2)
       assert(nOut < nIn,
         s"compaction did not shrink the postings file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dir),
+      def servedAsOf(w: Int) = bm.serveAsOf(s, src, w,
           operators.TextAnalysis.Bm25QueryTerms)
         .orderBy(col("doc_id")).collect().map(_.toString).toSeq
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = servedAsOf(v)
+      assert(before.nonEmpty && servedAsOf(v2) == before,
         "compacted BM25 index diverges from the pre-compaction serve")
-      val plan = graft.plans.Bm25Index.serve(s,
-          graft.plans.Bm25Index.load(s, dest),
+      val plan = bm.serve(s, bm.load(s, src),
           operators.TextAnalysis.Bm25QueryTerms)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("tbucket"),
@@ -2756,20 +2699,26 @@ class ScaleShapeSpec extends SparkSpec {
       def twin(off: Long) = s.read.parquet(s"$staging/embeddings.parquet")
         .where(col("vec_id").between(1, 8))
         .withColumn("vec_id", col("vec_id") + off)
+      val snaps = graft.plans.Snapshots
+      val assignDir = s"${graft.plans.IvfTopK.qualify(s, src)}/assignment"
+      snaps.commit(s, assignDir)
       graft.plans.IvfTopK.append(s, staging, twin(1000000L))
+      snaps.commit(s, assignDir)
       graft.plans.IvfTopK.append(s, staging, twin(2000000L))
-      val conf = s.sparkContext.hadoopConfiguration
-      val nIn = graft.Fs.listDataFiles(s"$src/assignment", conf).size
-      val dest = s"$staging/idx_c"
-      val nOut = graft.plans.IvfTopK.compact(s, src, dest)
+      val v = snaps.commit(s, assignDir)
+      val nIn = snaps.files(s, assignDir, v).size
+      // no tombstones: the purge is the copy-on-write merge of every
+      // fragmented cid partition
+      val v2 = graft.plans.IvfTopK.purgeCommit(s, src)
+      val nOut = snaps.files(s, assignDir, v2).size
       assert(nOut < nIn,
         s"compaction did not shrink the assignment file count ($nIn -> $nOut)")
-      def servedFrom(dir: String) = graft.plans.IvfTopK.serveTopK(s, dir)
+      def servedAsOf(w: Int) = graft.plans.IvfTopK.serveTopKAsOf(s, src, w)
         .collect().map(_.toString).toSeq
-      val before = servedFrom(src)
-      assert(before.nonEmpty && servedFrom(dest) == before,
+      val before = servedAsOf(v)
+      assert(before.nonEmpty && servedAsOf(v2) == before,
         "compacted IVF index diverges from the pre-compaction serve")
-      val plan = graft.plans.IvfTopK.serveTopK(s, dest)
+      val plan = graft.plans.IvfTopK.serveTopK(s, src)
         .queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters: [") && plan.contains("cid"),
         s"pruning lost after compaction:\n${plan.take(1200)}")
@@ -2790,9 +2739,10 @@ class ScaleShapeSpec extends SparkSpec {
       docs.where(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
       graft.plans.Bm25Index.save(s, tmp, dir)
-      val n = graft.plans.Bm25Index.append(s, dir,
+      val v1 = graft.plans.Bm25Index.commitSnapshot(s, dir)
+      val v2 = graft.plans.Bm25Index.appendCommit(s, dir,
         docs.where(col("doc_id") % 2 === 1))
-      assert(n === docs.where(col("doc_id") % 2 === 1).count())
+      assert(v2 == v1 + 1, s"append did not commit one version: v$v1 -> v$v2")
       val served = graft.plans.Bm25Index.serve(s,
         graft.plans.Bm25Index.load(s, dir),
         operators.TextAnalysis.Bm25QueryTerms)
